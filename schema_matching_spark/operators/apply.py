@@ -4,8 +4,10 @@
 Structured Streaming tail (foreachBatch calls it per micro-batch —
 streaming and batch are literally the same function, SURVEY.md §3.2).
 
-Stages: delivery-dedup (B2 batch flavor) → salted latest-wins collapse
-(B3+B4) → exactly-once MERGE into the snapshot table (B5).
+Stages: optional delivery-dedup (B2 batch flavor) → exactly-once MERGE
+into the snapshot table (B5), whose bucket window is the latest-wins
+collapse (B4); only a skewed full-log bootstrap adds the salted
+pre-reduce (B3).
 """
 
 from __future__ import annotations
@@ -27,13 +29,13 @@ def apply_batch(
 ) -> int:
     """Apply one bounded slice of the change log; returns new version.
 
-    The latest-wins collapse happens inside ``merge_apply`` (one salted
-    reduce against the current bucket rows — collapsing the batch
-    separately first would pay the same shuffles twice).
+    The latest-wins collapse happens inside ``merge_apply`` (one bucket
+    window over the batch and the current bucket rows — collapsing the
+    batch separately first would pay the same shuffles twice).
 
     Dedup note: an explicit dropDuplicates shuffle is redundant here —
-    duplicate (lsn, key) deliveries carry identical payloads, so the
-    merge's winner join-back + distinct absorbs them, and the table's
+    the merge's bucket window keeps exactly one row per key, so
+    duplicate (lsn, key) deliveries collapse there, and the table's
     lsn-LWW merge absorbs cross-batch redeliveries.  Pass
     ``dedup=True`` only when exact pre-merge row counters are needed.
     """

@@ -1,16 +1,10 @@
-"""Delivery dedup (SURVEY.md §2.B B2) and batch latest-wins collapse (B4).
+"""Delivery dedup (SURVEY.md §2.B B2).
 
 The CDC contract: at-least-once delivery from the WAL tail, so the same
 (lsn, conv_id, turn_idx) event can arrive more than once.  Streaming
 path uses the built-in watermarked stateful dedup; batch path uses a
-plain ``dropDuplicates`` (whole input visible, no state needed).
-
-Latest-wins collapse keeps only the final image per key within a batch.
-It is a single ``max_by`` hash aggregation — one shuffle with map-side
-partial aggregation — NOT a window function: a window would sort every
-key group and materialize row_numbers, which at 10^10 events is a
-needless per-partition sort.  ``max_by`` keeps whole-stage codegen and
-partial-agg combining (SURVEY.md §4.2).
+plain ``dropDuplicates`` (whole input visible, no state needed).  The
+latest-wins collapse (B4) is not here — see the NOTE at the end.
 """
 
 from __future__ import annotations
@@ -43,8 +37,10 @@ def dedup_stream(log: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     )
 
 
-# NOTE: the latest-wins collapse (B4) lives in operators/salting.py
-# (collapse_latest_salted) and plans/table.py (lww_reduce) — the
-# payload-free HashAggregate + join-back formulation.  A naive
-# max_by(struct) version was removed: it plans as ObjectHashAggregate
-# and sort-falls-back past 128 groups per partition (SURVEY.md §8.1).
+# NOTE: the latest-wins collapse (B4) lives in plans/table.py — the
+# bucket window of SnapshotTable._bucket_collapse on every commit, with
+# operators/salting.winners_join (payload-free HashAggregate +
+# join-back) as the skew pre-reduce for salted bootstraps, and
+# lww_reduce on MOR reads.  A naive max_by(struct) version was removed:
+# it plans as ObjectHashAggregate and sort-falls-back past 128 groups
+# per partition (SURVEY.md §8.1).

@@ -23,50 +23,13 @@ from pyspark.sql import functions as F
 from ..schemas import KEY_COLS
 
 
-def collapse_latest_salted(log: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Skew-proof B4: salted latest-wins collapse, payload-free agg.
-
-    Two phases, chosen for what Spark's aggregation engine can actually
-    hash-aggregate (measured, not assumed — see commit history):
-
-    1. **Winning-lsn search, narrow and salted.**  ``max(lsn)`` grouped
-       by (key, salt) then by key.  The aggregation buffer is a single
-       long, so this stays in whole-stage-codegen ``HashAggregate`` with
-       map-side partials.  A payload-carrying ``max_by(struct(...))``
-       instead plans as ObjectHashAggregate which *sort-falls-back after
-       128 groups per partition* (spark.sql.objectHashAggregate.
-       sortBased.fallbackThreshold) — at millions of keys that
-       degenerates to TimSorting every shuffle partition of full rows.
-       The salt level spreads a hot conversation's events over
-       ``n_salts`` reducers (north rule: skew handled explicitly);
-       map-side partial agg already bounds reducer load, AQE skew
-       handling stays on as defense-in-depth.
-
-    2. **Payload fetch by join-back.**  Inner join of the log on
-       (key, winning lsn) recovers the full winning row.  The winners
-       side is narrow (key + lsn); at micro-batch sizes it broadcasts,
-       at replay sizes it shuffled-hash-joins on the key (session
-       default prefers hash over sort-merge) — either way the wide
-       payload columns are never sorted and never enter an agg buffer.
-
-    Duplicate deliveries of the *winning* event survive the join (same
-    key + lsn); the keyed winner window absorbs them — including
-    payload-jittered redeliveries from a non-conforming WAL, which the
-    round-1 full-row ``distinct`` would have let through as duplicate
-    key rows.  The window's per-group sort is skew-safe here because
-    the inner join already dropped every non-winning event: a hot
-    conversation contributes only its winners' redeliveries, not its
-    raw event mass.
-    """
-    return dedup_winners(winners_join(log, n_salts=n_salts))
-
-
 def salted_winners(log: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Phase 1 alone: the narrow salted ``max(lsn)`` winner search —
-    one winning (key, lsn) row per key, no payload columns.  Exposed
-    separately so scripts/profile_replay.py measures the REAL phase-1
-    pipeline (an inline copy there would silently diverge if the
-    salting scheme changes)."""
+    """Phase 1 of ``winners_join`` alone: the narrow salted
+    ``max(lsn)`` winner search — one winning (key, lsn) row per key,
+    no payload columns.  Exposed separately so
+    scripts/profile_replay.py measures the REAL phase-1 pipeline (an
+    inline copy there would silently diverge if the salting scheme
+    changes)."""
     salted = log.withColumn("_salt", F.pmod(F.xxhash64("lsn"), F.lit(n_salts)))
     return (
         salted.groupBy(*KEY_COLS, "_salt")
@@ -77,9 +40,27 @@ def salted_winners(log: DataFrame, n_salts: int = 16) -> DataFrame:
 
 
 def winners_join(log: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Phases 1+2 without the final dedup: ≥1 row per key, every row a
-    winning (key, lsn) — table.py fuses the dedup into its
-    bucket-aligned write shuffle instead."""
+    """Skew-proof latest-wins pre-reduce, payload-free agg: ≥1 row per
+    key, every row a winning (key, lsn).  Two phases, chosen for what
+    Spark's aggregation engine can actually hash-aggregate:
+
+    1. **Winning-lsn search, narrow and salted** (``salted_winners``).
+       The aggregation buffer is a single long, so it stays in
+       whole-stage-codegen ``HashAggregate`` with map-side partials.  A
+       payload-carrying ``max_by(struct(...))`` instead plans as
+       ObjectHashAggregate, which sort-falls-back after 128 groups per
+       partition (spark.sql.objectHashAggregate.sortBased.
+       fallbackThreshold).  The salt spreads a hot conversation's
+       events over ``n_salts`` reducers.
+    2. **Payload fetch by join-back.**  Inner join of the log on (key,
+       winning lsn) recovers the full winning row; the wide payload
+       columns are never sorted and never enter an agg buffer.
+
+    Duplicate deliveries of the winning event survive the join (same
+    key + lsn).  table.py's bucket window (``_bucket_collapse``) drops
+    them in its bucket-aligned write shuffle, with the deterministic
+    ``winner_order`` tie-break; its sort is skew-safe because the join
+    already dropped every non-winning event."""
     winners = salted_winners(log, n_salts=n_salts)
     # shuffle_hash hint: broadcasting the winners would collect+build a
     # multi-million-entry hash relation single-threaded on the driver —
@@ -187,16 +168,3 @@ def winner_order():
         F.desc(F.xxhash64("op", "role", "text", "tool", "ts")),
     ]
 
-
-def dedup_winners(rows: DataFrame) -> DataFrame:
-    """≤1 row per key via a keyed window.  Callers must guarantee rows
-    per key are bounded (post-winners-join or pre-collapsed inputs) —
-    for raw skewed logs use winners_join first."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*KEY_COLS).orderBy(*winner_order())
-    return (
-        rows.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )

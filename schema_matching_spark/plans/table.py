@@ -28,12 +28,14 @@ Scale design: the table is hash-bucketed on ``conv_id`` into
 conversations — at 100 TB with (say) 8192 buckets and a micro-batch
 touching 1% of conversations, ~99% of the table's files are carried
 forward untouched in the new manifest; only affected buckets are read,
-re-reduced, and rewritten.  The merge itself is one hash aggregation
-over (affected current rows ∪ collapsed batch): current state
-contributes ≤1 row per key and the collapsed batch ≤1 row per key, so
-the reduce sees ≤2 rows per key — no skew is possible at this stage
-regardless of hot conversations (the salted collapse upstream already
-defused the raw-event skew).  On a cluster with
+re-reduced, and rewritten.  The merge itself is one bucket window
+(``_bucket_collapse``: a repartition on the bucket id, then a per-key
+last-write-wins row_number inside each bucket) over (affected current
+rows ∪ raw batch): current state contributes ≤1 row per key and the
+batch at most its own micro-batch mass, so per-bucket sort input stays
+bounded.  Every commit path — merge, overwrite, bootstrap, compact,
+rebucket — ends in the single manifest writer ``_commit_merge``.  On a
+cluster with
 ``iceberg-spark-runtime`` this sink swaps for ``DataFrame.mergeInto``
 (API verified present in PySpark 4.1.2) by configuration — the public
 surface below mirrors what it needs.
@@ -46,6 +48,7 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -436,19 +439,15 @@ class SnapshotTable:
             os.fsync(f.fileno())
         os.replace(tmp, path)
 
-    def _commit(self, manifest: dict) -> int:
-        version = manifest["version"]
-        manifest.setdefault("key_blooms", self._key_blooms)
-        # commit wall time as a manifest property: unlike lineage entries
-        # (a rolling window some ops don't append to), every commit gets
-        # one — the anchor timestamp-as-of time travel resolves against.
-        manifest.setdefault("committed_wall_ts", time.time())
-        if self._fence_lsn is not None:
-            # table property, carried across every commit path like mode
-            manifest.setdefault("fence_lsn", self._fence_lsn)
-        self._atomic_write_json(self._manifest_path(version), manifest)
-        self._atomic_write_json(self._pointer_path(), {"version": version})
-        return version
+    def _max_stored_lsn(self, files: list[dict]) -> int:
+        """Highest lsn stored in ``files``, tombstones included: from the
+        manifest's footer stats when every entry carries them, else one
+        scan of the raw ``lsn`` column (0 for no files)."""
+        stats = [f.get("lsn_max") for f in files]
+        if all(s is not None for s in stats):
+            return max(stats, default=0)
+        paths = [f["path"] for f in files]
+        return self._read_files(paths).agg(F.max("lsn")).collect()[0][0] or 0
 
     # -------------------------------------------------------------- read
 
@@ -679,15 +678,7 @@ class SnapshotTable:
             conv_ids = self.spark.createDataFrame(
                 [(c,) for c in conv_ids], "conv_id string"
             )
-        stats = [f.get("lsn_max") for f in cur["files"]]
-        if stats and all(s is not None for s in stats):
-            lsn_hi = max(stats)
-        elif cur["files"]:
-            lsn_hi = self._read_files(
-                [f["path"] for f in cur["files"]]
-            ).agg(F.max("lsn")).collect()[0][0] or 0
-        else:
-            lsn_hi = 0
+        lsn_hi = self._max_stored_lsn(cur["files"])
         ts_col = (
             F.lit(ts).cast("timestamp") if ts is not None
             else F.current_timestamp()
@@ -1100,29 +1091,10 @@ class SnapshotTable:
         entries = self._write_commit_files(
             df.select(*FILE_COLS).withColumn("_bucket", bucket_expr(self.n_buckets))
         )
-        version = self._next_version()
-        ledger, hw = _roll_ledger(cur, batch_id, version)
-        lineage, truncated = _roll_lineage(
-            cur,
-            {
-                "op": "overwrite",
-                "version": version,
-                "batch_id": batch_id,
-                "wall_ts": time.time(),
-            },
-        )
-        return self._commit(
-            {
-                "version": version,
-                "parent": cur["version"],
-                "n_buckets": self.n_buckets,
-                "mode": self._mode,
-                "files": entries,
-                "applied_batches": ledger,
-                "applied_evicted_high_water": hw,
-                "lineage": lineage,
-                "lineage_truncated": truncated,
-            }
+        # lineage keeps a null batch_id when none is given;
+        # _commit_merge stamps a given one over it
+        return self._commit_merge(
+            cur, entries, {"op": "overwrite", "batch_id": None}, batch_id
         )
 
     def bootstrap_load(
@@ -1178,31 +1150,8 @@ class SnapshotTable:
         data = self._bucket_collapse(rows)
         entries = self._write_commit_files(data.select(*FILE_COLS, "_bucket"))
         self._fence_lsn = fence
-        version = self._next_version()
-        ledger, hw = _roll_ledger(cur, batch_id, version)
-        lineage, truncated = _roll_lineage(
-            cur,
-            {
-                "op": "bootstrap",
-                "version": version,
-                "batch_id": str(batch_id),
-                "fence_lsn": fence,
-                "wall_ts": time.time(),
-            },
-        )
-        return self._commit(
-            {
-                "version": version,
-                "parent": cur["version"],
-                "n_buckets": self.n_buckets,
-                "mode": self._mode,
-                "fence_lsn": fence,
-                "files": entries,
-                "applied_batches": ledger,
-                "applied_evicted_high_water": hw,
-                "lineage": lineage,
-                "lineage_truncated": truncated,
-            }
+        return self._commit_merge(
+            cur, entries, {"op": "bootstrap", "fence_lsn": fence}, batch_id
         )
 
     def export_snapshot(self, out_dir: str, version: int | None = None) -> dict:
@@ -1234,11 +1183,7 @@ class SnapshotTable:
         rows = self._read_files([f["path"] for f in m["files"]])
         if m.get("mode", "cow") == "mor":
             rows = lww_reduce(rows)
-        stats = [f.get("lsn_max") for f in m["files"]]
-        if all(s is not None for s in stats):
-            fence = max(int(s) for s in stats)
-        else:
-            fence = int(rows.agg(F.max("lsn")).collect()[0][0])
+        fence = self._max_stored_lsn(m["files"])
         if m.get("fence_lsn") is not None:
             fence = max(fence, int(m["fence_lsn"]))
         state = rows.where(F.col("op") != "D").select(*TRANSCRIPT_COLS, "lsn")
@@ -1298,29 +1243,14 @@ class SnapshotTable:
                 (F.col("op") != "D") | (F.col("lsn") >= tombstone_horizon_lsn)
             )
         entries = self._write_commit_files(rows)
-        version = self._next_version()
-        lineage, truncated = _roll_lineage(
+        return self._commit_merge(
             cur,
+            keep + entries,
             {
                 "op": "compact",
-                "version": version,
                 "tombstone_horizon_lsn": tombstone_horizon_lsn,
                 "buckets": sorted(buckets) if buckets is not None else None,
-                "wall_ts": time.time(),
             },
-        )
-        return self._commit(
-            {
-                "version": version,
-                "parent": cur["version"],
-                "n_buckets": self.n_buckets,
-                "mode": self._mode,
-                "files": keep + entries,
-                "applied_batches": dict(cur["applied_batches"]),
-                "applied_evicted_high_water": cur.get("applied_evicted_high_water"),
-                "lineage": lineage,
-                "lineage_truncated": truncated,
-            }
         )
 
     def rebucket(self, n_buckets: int) -> int:
@@ -1344,38 +1274,19 @@ class SnapshotTable:
         assert n_buckets >= 1, n_buckets
         cur = self.manifest()
         rows = self._read_files([f["path"] for f in cur["files"]])
-        if self._mode == "mor":
-            rows = lww_reduce(rows)  # fold deltas while we pay the rewrite
         old_n = self.n_buckets
         self.n_buckets = n_buckets
         try:
+            # the bucket collapse also folds MOR deltas (one winner per
+            # key), so the rewrite needs no separate LWW window
             entries = self._write_commit_files(self._bucket_collapse(rows))
         except Exception:
             self.n_buckets = old_n  # nothing committed; restore the spec
             raise
-        version = self._next_version()
-        lineage, truncated = _roll_lineage(
+        return self._commit_merge(
             cur,
-            {
-                "op": "rebucket",
-                "version": version,
-                "from_buckets": old_n,
-                "to_buckets": n_buckets,
-                "wall_ts": time.time(),
-            },
-        )
-        return self._commit(
-            {
-                "version": version,
-                "parent": cur["version"],
-                "n_buckets": n_buckets,
-                "mode": self._mode,
-                "files": entries,
-                "applied_batches": dict(cur["applied_batches"]),
-                "applied_evicted_high_water": cur.get("applied_evicted_high_water"),
-                "lineage": lineage,
-                "lineage_truncated": truncated,
-            }
+            entries,
+            {"op": "rebucket", "from_buckets": old_n, "to_buckets": n_buckets},
         )
 
     # -------------------------------------------------- metadata views
@@ -1699,13 +1610,18 @@ class SnapshotTable:
         Physical plans (all three paths end in the same fused
         dedup+cluster bucket shuffle, ``_bucket_collapse``):
 
-        * **bootstrap** (empty table): salted narrow ``max(lsn)``
-          winner search + shuffled-hash join-back (raw hot-key skew is
-          defused HERE — operators/salting.py) → bucket collapse →
-          bucketed write.  Two payload shuffles over the log, one
-          clean file set per bucket.
-        * **MOR**: same shape over the micro-batch only; deltas
-          append, current data untouched, reads reduce, compact folds.
+        * **bootstrap** (empty table): ``collapse`` picks the plan —
+          "auto" probes the log (``choose_collapse``: per-bucket mass +
+          approx distinct keys) and records the decision in lineage.
+          *Direct*: the raw log goes straight into the bucket collapse
+          (one payload shuffle).  *Salted*: narrow salted ``max(lsn)``
+          winner search + shuffled-hash join-back first (raw hot-key
+          skew is defused HERE — operators/salting.py), then the bucket
+          collapse (two payload shuffles).  Either way one clean file
+          set per bucket.
+        * **MOR**: the raw micro-batch goes straight into the bucket
+          collapse; deltas append, current data untouched, reads
+          reduce, compact folds.
         * **incremental COW**: union raw batch with the touched
           buckets' stored rows → bucket collapse → rewrite affected
           buckets.  ONE payload shuffle (round 1 paid three:
@@ -1720,8 +1636,6 @@ class SnapshotTable:
         re-apply, with or without payload jitter — resolves to exactly
         one row via the deterministic winner order.
         """
-        from ..operators.salting import winners_join
-
         if collapse not in ("auto", "direct", "salted"):
             # fail loudly: a typo ('Direct', 'none') would otherwise
             # silently take the salted path with no lineage record,
@@ -1748,6 +1662,7 @@ class SnapshotTable:
             self._fence_lsn = int(fence)
             changes = changes.where(F.col("lsn") > F.lit(int(fence)))
 
+        pstats = None
         if not cur["files"]:
             # Bootstrap fast path (empty table / full-log replay): the
             # collapse IS the whole merge — reduce the raw log and
@@ -1765,7 +1680,7 @@ class SnapshotTable:
             # mass + approx distinct keys — and picks; the decision and
             # its evidence land in the commit lineage
             # (``collapse_policy``) so every bootstrap is auditable.
-            from ..operators.salting import choose_collapse
+            from ..operators.salting import choose_collapse, winners_join
 
             policy, pstats = (
                 choose_collapse(changes, self.n_buckets)
@@ -1778,22 +1693,9 @@ class SnapshotTable:
                 data = self._bucket_collapse(
                     winners_join(changes, n_salts=n_salts)
                 )
-            if pstats is not None:
-                if callable(extra_lineage):
-                    base, stats = extra_lineage, pstats
-
-                    def extra_lineage():
-                        return {**base(), "collapse_policy": stats}
-                else:
-                    extra_lineage = dict(extra_lineage or {})
-                    extra_lineage["collapse_policy"] = pstats
-            new_entries = self._write_commit_files(data.select(*FILE_COLS, "_bucket"))
-            affected = {e["bucket"] for e in new_entries}
-            return self._commit_merge(
-                cur, [], new_entries, batch_id, affected, extra_lineage
-            )
-
-        if self._mode == "mor":
+            files = self._write_commit_files(data.select(*FILE_COLS, "_bucket"))
+            affected = {e["bucket"] for e in files}
+        elif self._mode == "mor":
             # Merge-on-read: append the batch's per-key winners as delta
             # files; current data is untouched (reads reduce, compact()
             # folds).  A micro-batch commit costs O(batch), never
@@ -1806,68 +1708,85 @@ class SnapshotTable:
             data = self._bucket_collapse(changes.select(*FILE_COLS))
             new_entries = self._write_commit_files(data.select(*FILE_COLS, "_bucket"))
             affected = {e["bucket"] for e in new_entries}
-            return self._commit_merge(
-                cur, list(cur["files"]), new_entries, batch_id, affected,
-                extra_lineage,
-            )
+            files = cur["files"] + new_entries
+        else:
+            batch_rows = changes.select(*FILE_COLS)
+            batch_rows.persist()
+            try:
+                affected = {
+                    r["_bucket"]
+                    for r in batch_rows.select(
+                        bucket_expr(self.n_buckets).alias("_bucket")
+                    )
+                    .distinct()
+                    .collect()
+                }
+                keep = [f for f in cur["files"] if f["bucket"] not in affected]
+                touch = [f["path"] for f in cur["files"] if f["bucket"] in affected]
+                rows = self._read_files(touch).unionByName(batch_rows)
+                files = keep + self._write_commit_files(self._bucket_collapse(rows))
+            finally:
+                batch_rows.unpersist()
 
-        batch_rows = changes.select(*FILE_COLS)
-        batch_rows.persist()
-        try:
-            affected = {
-                r["_bucket"]
-                for r in batch_rows.select(
-                    bucket_expr(self.n_buckets).alias("_bucket")
-                )
-                .distinct()
-                .collect()
-            }
-            keep = [f for f in cur["files"] if f["bucket"] not in affected]
-            touch_paths = [f["path"] for f in cur["files"] if f["bucket"] in affected]
+        def lineage() -> dict:
+            # resolved after the write: a callable extra_lineage may read
+            # an Observation whose metrics exist only once the write ran
+            extra = extra_lineage() if callable(extra_lineage) else extra_lineage
+            entry = {"op": "merge", "affected_buckets": sorted(affected)}
+            entry.update(extra or {})
+            if pstats is not None:
+                entry["collapse_policy"] = pstats
+            return entry
 
-            rows = self._read_files(touch_paths).unionByName(batch_rows)
-            new_entries = self._write_commit_files(self._bucket_collapse(rows))
-            return self._commit_merge(
-                cur, keep, new_entries, batch_id, affected, extra_lineage
-            )
-        finally:
-            batch_rows.unpersist()
+        return self._commit_merge(cur, files, lineage, batch_id)
 
     def _commit_merge(
         self,
         cur: dict,
-        keep: list[dict],
-        new_entries: list[dict],
-        batch_id: str | int,
-        affected: set[int],
-        extra_lineage: dict | None,
+        files: list[dict],
+        lineage: dict | Callable[[], dict],
+        batch_id: str | int | None = None,
     ) -> int:
+        """The one commit primitive: every write path (merge, purge,
+        overwrite, bootstrap, compact, rebucket) ends here, so the
+        manifest format and the ledger/lineage retention policy live in
+        this function alone.
+
+        ``files`` is the new snapshot's complete live file list;
+        ``lineage`` is the op's lineage entry (``{"op": ..., ...}``), or a
+        callable returning it, resolved at commit time.  A ``batch_id``
+        enters the applied-batch ledger and is stamped into the lineage
+        entry; maintenance ops pass none and carry the ledger forward.
+        The manifest is written before the pointer flips, so a crash
+        leaves either the old snapshot or the new one visible, and an
+        orphan manifest is overwritten by the next commit.  Single-driver
+        version allocation (see ``_next_version``)."""
         version = self._next_version()
         ledger, hw = _roll_ledger(cur, batch_id, version)
-        lineage_entry = {
-            "op": "merge",
+        entry = lineage() if callable(lineage) else lineage
+        entry = {"op": entry["op"], "version": version, **entry}
+        if batch_id is not None:
+            entry["batch_id"] = str(batch_id)
+        entry.setdefault("wall_ts", time.time())
+        history, truncated = _roll_lineage(cur, entry)
+        manifest = {
             "version": version,
-            "batch_id": str(batch_id),
-            "affected_buckets": sorted(affected),
-            "wall_ts": time.time(),
+            "parent": cur["version"],
+            "n_buckets": self.n_buckets,
+            "mode": self._mode,
+            "files": files,
+            "applied_batches": ledger,
+            "applied_evicted_high_water": hw,
+            "lineage": history,
+            "lineage_truncated": truncated,
+            "key_blooms": self._key_blooms,
+            # every commit gets a wall time (unlike lineage, a rolling
+            # window), the anchor version_as_of resolves against
+            "committed_wall_ts": time.time(),
         }
-        if callable(extra_lineage):
-            # lazily-resolved lineage (e.g. an Observation whose metrics
-            # only exist once the merge's write action has run)
-            extra_lineage = extra_lineage()
-        if extra_lineage:
-            lineage_entry.update(extra_lineage)
-        lineage, truncated = _roll_lineage(cur, lineage_entry)
-        return self._commit(
-            {
-                "version": version,
-                "parent": cur["version"],
-                "n_buckets": self.n_buckets,
-                "mode": self._mode,
-                "files": keep + new_entries,
-                "applied_batches": ledger,
-                "applied_evicted_high_water": hw,
-                "lineage": lineage,
-                "lineage_truncated": truncated,
-            }
-        )
+        if self._fence_lsn is not None:
+            # table property, carried across every commit path like mode
+            manifest["fence_lsn"] = self._fence_lsn
+        self._atomic_write_json(self._manifest_path(version), manifest)
+        self._atomic_write_json(self._pointer_path(), {"version": version})
+        return version

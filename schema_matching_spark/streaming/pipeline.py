@@ -5,8 +5,8 @@ Flow::
     WAL segments → readStream → withWatermark + dropDuplicatesWithinWatermark
       → foreachBatch(batch_id, df):
             [schema-drift check → evolution-mapper projection (B7)]
-            → salted latest-wins collapse (B3+B4)
-            → exactly-once merge into SnapshotTable (B5)
+            → exactly-once merge into SnapshotTable (B5): one bucket
+              window does the latest-wins collapse (B4) and the merge
             → lineage ledger entry + observed counters (B8)
 
 Resumability: Structured Streaming's checkpoint tracks per-file source

@@ -78,9 +78,10 @@ def main() -> None:
     ap.add_argument(
         "--oracle-dir",
         default=None,
-        help="where the folded-oracle winners parquet lives (default: "
-        "under the tmpfs scratch root; pass a disk path, e.g. "
-        "/tmp/sustained_oracle, to keep ~2x winners size off RAM)",
+        help="parent dir for the folded-oracle winners parquet (default: "
+        "under the tmpfs scratch root; pass a disk path, e.g. /tmp, to "
+        "keep ~2x winners size off RAM).  The run writes into a "
+        "pid-unique subdirectory and removes only that",
     )
     # Both 1e9 one-pass attempts died to GCLocker allocation retries
     # (BENCH/hunt_r5.jsonl r5_1g_sustained fires 1-2): 32 zstd-JNI
@@ -126,7 +127,12 @@ def main() -> None:
 
     root = os.path.join(SHM, f"sustained_{os.getpid()}")
     os.makedirs(root, exist_ok=True)
-    oracle_root = args.oracle_dir or root
+    # a pid-unique subdirectory: cleanup removes only what this run made,
+    # never the user-supplied directory itself
+    oracle_root = (
+        os.path.join(args.oracle_dir, f"sustained_oracle_{os.getpid()}")
+        if args.oracle_dir else root
+    )
     os.makedirs(oracle_root, exist_ok=True)
     spark = get_spark(
         "bench_sustained",
@@ -314,8 +320,7 @@ def main() -> None:
     finally:
         spark.stop()
         shutil.rmtree(root, ignore_errors=True)
-        if args.oracle_dir:
-            shutil.rmtree(args.oracle_dir, ignore_errors=True)
+        shutil.rmtree(oracle_root, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -174,10 +174,8 @@ def test_clause_semantics_match_merge_apply(spark, tmp_path):
     clause executor and through SnapshotTable.merge_apply must yield
     identical visible states (readers filter op != 'D' on both sides:
     read_iceberg_state mirrors SnapshotTable.read)."""
-    from schema_matching_spark.operators.salting import (
-        collapse_latest_salted,
-    )
-    from schema_matching_spark.plans.table import SnapshotTable
+    from schema_matching_spark.operators.salting import winners_join
+    from schema_matching_spark.plans.table import SnapshotTable, lww_reduce
     from schema_matching_spark.sources.generator import (
         changes,
         with_dup_delivery,
@@ -194,7 +192,7 @@ def test_clause_semantics_match_merge_apply(spark, tmp_path):
                 partitions=4,
             )
         )
-        collapsed = collapse_latest_salted(batch)
+        collapsed = lww_reduce(winners_join(batch))
         _merge_clause_executor(
             state, (r.asDict() for r in collapsed.collect())
         )

@@ -22,6 +22,10 @@ from schema_matching_spark.plans.table import (
 from schema_matching_spark.sources.generator import changes, expected_state
 
 
+#: lineage entry of a merge that touched no bucket
+_EMPTY_MERGE = {"op": "merge", "affected_buckets": []}
+
+
 def _manifest_bytes(table):
     return os.path.getsize(table._manifest_path(table.current_version()))
 
@@ -34,8 +38,7 @@ def test_manifest_growth_is_bounded_over_300_commits(spark, tmp_path):
     sizes = []
     for i in range(300):
         cur = table.manifest()
-        table._commit_merge(cur, [], [], batch_id=i, affected=set(),
-                            extra_lineage=None)
+        table._commit_merge(cur, [], _EMPTY_MERGE, batch_id=i)
         sizes.append(_manifest_bytes(table))
     m = table.manifest()
     assert len(m["lineage"]) == LINEAGE_KEEP
@@ -52,8 +55,7 @@ def test_evicted_numeric_batch_ids_stay_applied(spark, tmp_path):
     table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4)
     for i in range(APPLIED_KEEP + 40):
         cur = table.manifest()
-        table._commit_merge(cur, [], [], batch_id=i, affected=set(),
-                            extra_lineage=None)
+        table._commit_merge(cur, [], _EMPTY_MERGE, batch_id=i)
     m = table.manifest()
     # batch 0..39 were evicted from the window yet must read as applied
     assert "0" not in m["applied_batches"]
@@ -63,8 +65,7 @@ def test_evicted_numeric_batch_ids_stay_applied(spark, tmp_path):
     assert not _batch_applied(m, APPLIED_KEEP + 40)  # never applied
     # non-numeric ids inside the window still dedup exactly
     cur = table.manifest()
-    table._commit_merge(cur, [], [], batch_id="restart-marker",
-                        affected=set(), extra_lineage=None)
+    table._commit_merge(cur, [], _EMPTY_MERGE, batch_id="restart-marker")
     assert _batch_applied(table.manifest(), "restart-marker")
     assert not _batch_applied(table.manifest(), "never-seen")
 
@@ -272,3 +273,45 @@ def test_point_lookup_prunes_to_one_bucket(spark, tmp_path):
         assert got == expected_rows, mode
         # a conversation that doesn't exist returns empty, not an error
         assert table.lookup("conv-nope").isEmpty()
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_every_commit_path_writes_one_manifest_shape(spark, tmp_path, mode):
+    """Every commit path goes through the one manifest writer: each
+    manifest has the same top-level keys, its parent is the previous
+    head, and only the paths given a batch id add a ledger entry."""
+    log = changes(spark, 600, n_conv=12, turns_per_conv=6, partitions=2).cache()
+    table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4, mode=mode)
+    some_conv = log.select("conv_id").first()["conv_id"]
+    steps = [
+        ("bootstrap", "boot", lambda: table.bootstrap_load(
+            expected_state(log.where(F.col("lsn") < 300)), 299, batch_id="boot"
+        )),
+        ("merge", "b1", lambda: table.merge_apply(
+            log.where(F.col("lsn") >= 300), "b1"
+        )),
+        ("merge", "p1", lambda: table.purge([some_conv], "p1", ts="2024-01-01")),
+        ("compact", None, lambda: table.compact()),
+        ("rebucket", None, lambda: table.rebucket(8)),
+        ("overwrite", "o1", lambda: table.overwrite(table.read(), batch_id="o1")),
+        ("overwrite", None, lambda: table.overwrite(table.read())),
+    ]
+    keys = None
+    for op, batch_id, run in steps:
+        prev = table.manifest()
+        run()
+        m = table.manifest()
+        keys = keys or set(m)
+        assert set(m) == keys, op
+        assert m["parent"] == prev["version"], op
+        entry = m["lineage"][-1]
+        assert (entry["op"], entry["version"]) == (op, m["version"])
+        expected_ledger = dict(prev["applied_batches"])
+        if batch_id is not None:
+            expected_ledger[batch_id] = m["version"]
+        assert m["applied_batches"] == expected_ledger, op
+        if batch_id is not None or op == "overwrite":
+            assert entry["batch_id"] == batch_id, op
+        else:
+            assert "batch_id" not in entry, op
+    assert "fence_lsn" in keys and m["n_buckets"] == 8

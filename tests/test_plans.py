@@ -64,14 +64,16 @@ def test_whole_stage_codegen_covers_agg(spark):
     assert "* ColumnarToRow" in plan or "* Project" in plan or "* Filter" in plan
 
 
-def test_cdc_collapse_plan_is_jvm_only(spark):
+def test_cdc_collapse_plan_is_jvm_only(spark, tmp_path):
     """The CDC hot path must never fall out of the JVM: no row-at-a-time
     or Arrow Python evaluation nodes in collapse+merge reduce plans."""
-    from schema_matching_spark.operators.salting import collapse_latest_salted
+    from schema_matching_spark.operators.salting import winners_join
+    from schema_matching_spark.plans.table import SnapshotTable
     from schema_matching_spark.sources.generator import changes
 
+    table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4)
     log = changes(spark, 10_000, n_conv=50, turns_per_conv=20, partitions=4)
-    plan = _plan(collapse_latest_salted(log, n_salts=4))
+    plan = _plan(table._bucket_collapse(winners_join(log, n_salts=4)))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
     assert "FlatMapGroupsInPandas" not in plan

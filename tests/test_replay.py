@@ -147,8 +147,8 @@ def test_crash_safety_of_commit_protocol(spark, tmp_path):
     the next real commit overwrites the orphan and proceeds cleanly
     (SURVEY.md §7.3 / §7.4 'exactly-once without a transactional
     catalog')."""
-    from schema_matching_spark.operators.salting import collapse_latest_salted
-    from schema_matching_spark.plans.table import FILE_COLS, bucket_expr
+    from schema_matching_spark.operators.salting import winners_join
+    from schema_matching_spark.plans.table import FILE_COLS, bucket_expr, lww_reduce
 
     table = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=4)
     b0 = changes(spark, 1000, n_conv=10, turns_per_conv=10, partitions=2)
@@ -159,7 +159,7 @@ def test_crash_safety_of_commit_protocol(spark, tmp_path):
     batch = changes(
         spark, 500, n_conv=10, turns_per_conv=10, lsn_start=1000, partitions=2
     )
-    collapsed = collapse_latest_salted(batch, n_salts=4).withColumn(
+    collapsed = lww_reduce(winners_join(batch, n_salts=4)).withColumn(
         "_bucket", bucket_expr(4)
     )
     # crash #1: files written, no manifest/pointer — nothing visible
