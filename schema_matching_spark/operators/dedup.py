@@ -1,9 +1,10 @@
 """Delivery dedup (SURVEY.md §2.B B2).
 
 The CDC contract: at-least-once delivery from the WAL tail, so the same
-(lsn, conv_id, turn_idx) event can arrive more than once.  Streaming
-path uses the built-in watermarked stateful dedup; batch path uses a
-plain ``dropDuplicates`` (whole input visible, no state needed).  The
+(lsn, conv_id, turn_idx) event can arrive more than once.  The streaming
+path drops them early with the built-in watermarked stateful dedup; the
+batch path needs no pass of its own — the merge's bucket window keeps
+one row per key, so a duplicate delivery collapses there.  The
 latest-wins collapse (B4) is not here — see the NOTE at the end.
 """
 
@@ -14,11 +15,6 @@ from pyspark.sql import DataFrame
 from ..schemas import KEY_COLS
 
 DEDUP_KEYS = ["lsn", *KEY_COLS]
-
-
-def dedup_batch(log: DataFrame) -> DataFrame:
-    """Exact delivery-dedup for bounded (batch/replay) inputs."""
-    return log.dropDuplicates(DEDUP_KEYS)
 
 
 def dedup_stream(log: DataFrame, watermark: str = "10 minutes") -> DataFrame:

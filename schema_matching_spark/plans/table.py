@@ -457,9 +457,18 @@ class SnapshotTable:
         scan time (delta files may hold newer versions of a key)."""
         m = self.manifest(version)
         rows = self._read_files([f["path"] for f in m["files"]])
+        return self._live(m, rows).select(*TRANSCRIPT_COLS)
+
+    def _live(self, m: dict, rows: DataFrame, *residual) -> DataFrame:
+        """The read-side LWW decision every reader shares: on a MOR
+        snapshot reduce ``rows`` to each key's winner (delta files may
+        hold newer versions of a key), apply the ``residual`` predicates,
+        then drop tombstones."""
         if m.get("mode", "cow") == "mor":
             rows = lww_reduce(rows)
-        return rows.where(F.col("op") != "D").select(*TRANSCRIPT_COLS)
+        for cond in residual:
+            rows = rows.where(cond)
+        return rows.where(F.col("op") != "D")
 
     def _read_files(self, paths: list[str]) -> DataFrame:
         """Raw file rows (transcript cols + lsn)."""
@@ -549,13 +558,7 @@ class SnapshotTable:
             "files_read": len(paths),
         }
         rows = self._read_files(paths).where(F.col("conv_id") == conv_id)
-        if m.get("mode", "cow") == "mor":
-            rows = lww_reduce(rows)
-        return (
-            rows.where(F.col("op") != "D")
-            .select(*TRANSCRIPT_COLS)
-            .orderBy("turn_idx")
-        )
+        return self._live(m, rows).select(*TRANSCRIPT_COLS).orderBy("turn_idx")
 
     def scan(self, ts_min=None, ts_max=None, version: int | None = None) -> DataFrame:
         """Time-range read with manifest-level file skipping: open only
@@ -600,22 +603,18 @@ class SnapshotTable:
         else:
             files = [f for f in live if overlaps(f)]
         self.last_scan_stats = {"files_total": len(live), "files_read": len(files)}
-        rows = self._read_files([f["path"] for f in files])
-        if m.get("mode", "cow") == "mor":
-            rows = lww_reduce(rows)
         import datetime as dt
 
+        def at(us):
+            return F.lit(dt.datetime.fromtimestamp(us / 1e6, dt.timezone.utc))
+
+        residual = []
         if lo is not None:
-            rows = rows.where(
-                F.col("ts")
-                >= F.lit(dt.datetime.fromtimestamp(lo / 1e6, dt.timezone.utc))
-            )
+            residual.append(F.col("ts") >= at(lo))
         if hi is not None:
-            rows = rows.where(
-                F.col("ts")
-                <= F.lit(dt.datetime.fromtimestamp(hi / 1e6, dt.timezone.utc))
-            )
-        return rows.where(F.col("op") != "D").select(*TRANSCRIPT_COLS)
+            residual.append(F.col("ts") <= at(hi))
+        rows = self._read_files([f["path"] for f in files])
+        return self._live(m, rows, *residual).select(*TRANSCRIPT_COLS)
 
     def read_keys(self, keys: DataFrame, version: int | None = None) -> DataFrame:
         """Live rows (transcript cols + lsn) of ONLY the conversations
@@ -637,9 +636,7 @@ class SnapshotTable:
         }
         paths = [f["path"] for f in m["files"] if f["bucket"] in touched]
         rows = self._read_files(paths).join(keys, "conv_id", "semi")
-        if m.get("mode", "cow") == "mor":
-            rows = lww_reduce(rows)
-        return rows.where(F.col("op") != "D").select(*TRANSCRIPT_COLS, "lsn")
+        return self._live(m, rows).select(*TRANSCRIPT_COLS, "lsn")
 
     def purge(self, conv_ids, batch_id, ts=None) -> int:
         """Right-to-erasure maintenance commit (GDPR/CCPA delete): drop
@@ -1024,28 +1021,22 @@ class SnapshotTable:
             )
         return out
 
-    def _write_commit_files(self, df: DataFrame, cluster: bool = False) -> list[dict]:
+    def _write_commit_files(self, df: DataFrame) -> list[dict]:
         """Write ``df`` (FILE_COLS + _bucket) bucket-partitioned; return
         manifest file entries.
 
-        Default (cluster=False) writes straight from the incoming
-        partitioning: each task sorts by (_bucket, key) — satisfying the
-        partitioned writer's required ordering AND clustering rows by
-        key inside each file — and emits one file per (task, bucket).
-        The upstream merge join has already shuffled the rows once;
-        re-shuffling full-width payloads a second time just to get
-        one-file-per-bucket was the single biggest cost of a commit
-        (measured).  More, smaller files per bucket are absorbed by the
-        manifest and merged away by compact().
-
-        cluster=True forces the extra repartition for one-file-per-bucket
-        layouts (used by compact, where file-count reduction is the
-        point).
+        Writes straight from the incoming partitioning: each task sorts
+        by (_bucket, key) — satisfying the partitioned writer's required
+        ordering AND clustering rows by key inside each file — and emits
+        one file per (task, bucket).  On every path but ``overwrite`` the
+        rows arrive from ``_bucket_collapse``, already shuffled once on
+        ``_bucket``; re-shuffling full-width payloads a second time just
+        to get one-file-per-bucket was the single biggest cost of a
+        commit (measured).  More, smaller files per bucket are absorbed
+        by the manifest and merged away by compact().
         """
         commit_id = uuid.uuid4().hex
         out_dir = os.path.join(self.root, "data", commit_id)
-        if cluster:
-            df = df.repartition(F.col("_bucket"))
         (
             df.sortWithinPartitions("_bucket", *KEY_COLS)
             .write.partitionBy("_bucket")
@@ -1181,12 +1172,10 @@ class SnapshotTable:
         if not m["files"]:
             raise ValueError("cannot export an empty table")
         rows = self._read_files([f["path"] for f in m["files"]])
-        if m.get("mode", "cow") == "mor":
-            rows = lww_reduce(rows)
         fence = self._max_stored_lsn(m["files"])
         if m.get("fence_lsn") is not None:
             fence = max(fence, int(m["fence_lsn"]))
-        state = rows.where(F.col("op") != "D").select(*TRANSCRIPT_COLS, "lsn")
+        state = self._live(m, rows).select(*TRANSCRIPT_COLS, "lsn")
         os.makedirs(out_dir, exist_ok=True)
         state.write.parquet(os.path.join(out_dir, "state"))
         meta = {
@@ -1593,8 +1582,6 @@ class SnapshotTable:
         changes: DataFrame,
         batch_id: str | int,
         extra_lineage: dict | None = None,
-        n_salts: int = 16,
-        collapse: str = "auto",
     ) -> int:
         """Exactly-once MERGE of a change set — raw or pre-collapsed;
         the latest-wins reduce happens HERE, once, against the current
@@ -1607,28 +1594,25 @@ class SnapshotTable:
         beyond the dedup watermark, in any later batch) is a no-op for
         that key.
 
-        Physical plans (all three paths end in the same fused
-        dedup+cluster bucket shuffle, ``_bucket_collapse``):
+        One pipeline: pick the input rows and the file entries to carry
+        forward, then one fused dedup+cluster bucket shuffle
+        (``_bucket_collapse``), one write, one commit.  The input side
+        is the only thing that differs:
 
-        * **bootstrap** (empty table): ``collapse`` picks the plan —
-          "auto" probes the log (``choose_collapse``: per-bucket mass +
-          approx distinct keys) and records the decision in lineage.
-          *Direct*: the raw log goes straight into the bucket collapse
-          (one payload shuffle).  *Salted*: narrow salted ``max(lsn)``
-          winner search + shuffled-hash join-back first (raw hot-key
-          skew is defused HERE — operators/salting.py), then the bucket
-          collapse (two payload shuffles).  Either way one clean file
-          set per bucket.
-        * **MOR**: the raw micro-batch goes straight into the bucket
-          collapse; deltas append, current data untouched, reads
-          reduce, compact folds.
-        * **incremental COW**: union raw batch with the touched
-          buckets' stored rows → bucket collapse → rewrite affected
-          buckets.  ONE payload shuffle (round 1 paid three:
-          join-back + dedup agg + cluster repartition).  The raw
-          micro-batch skips the salted pre-collapse: at micro-batch
-          size a hot conversation's rows sort in-bucket for free,
-          and stored buckets are hash-balanced ≤1 row/key.
+        * **empty table** (bootstrap / full-log replay): the raw log,
+          unless the ``choose_collapse`` probe (per-bucket mass + approx
+          distinct keys, recorded in lineage as ``collapse_policy``)
+          measures hot-key skew or heavy duplication — then the narrow
+          salted ``max(lsn)`` winner search + join-back
+          (``winners_join``) pre-reduces it, so no hot conversation
+          concentrates sort mass in one bucket task.
+        * **MOR**: the raw micro-batch; its winners append as delta
+          files next to the untouched current files (reads reduce,
+          compact folds).  A micro-batch's hot-key mass is bounded by
+          its size, so it never needs the salted pre-pass.
+        * **COW**: the raw batch unioned with the stored rows of the
+          buckets it touches; those buckets are rewritten, every other
+          file entry carries forward.  Stored buckets hold ≤1 row/key.
 
         Losers vanish; winners keep op — op='D' rows persist as
         tombstones so the delete's lsn keeps guarding the key.  A batch
@@ -1636,14 +1620,6 @@ class SnapshotTable:
         re-apply, with or without payload jitter — resolves to exactly
         one row via the deterministic winner order.
         """
-        if collapse not in ("auto", "direct", "salted"):
-            # fail loudly: a typo ('Direct', 'none') would otherwise
-            # silently take the salted path with no lineage record,
-            # and the caller would believe their forced choice ran
-            raise ValueError(
-                f"collapse must be 'auto'|'direct'|'salted', got {collapse!r}"
-            )
-
         cur = self.manifest()
         if _batch_applied(cur, batch_id):
             return cur["version"]  # idempotent replay
@@ -1662,71 +1638,41 @@ class SnapshotTable:
             self._fence_lsn = int(fence)
             changes = changes.where(F.col("lsn") > F.lit(int(fence)))
 
-        pstats = None
-        if not cur["files"]:
-            # Bootstrap fast path (empty table / full-log replay): the
-            # collapse IS the whole merge — reduce the raw log and
-            # stream it straight into the bucketed writer (no persist,
-            # no affected-bucket collect, no union).
-            #
-            # Collapse strategy (``collapse``): "direct" shuffles the
-            # raw log ONCE on _bucket and lets the bucket window do the
-            # whole LWW reduce (minimum full-width bytes moved, ~2×
-            # faster on uniform logs — scripts/profile_replay.py);
-            # "salted" pre-reduces with the narrow salted winner search
-            # + join-back so no hot conversation or high-update log can
-            # concentrate sort mass in one task.  "auto" (default)
-            # MEASURES the input — one narrow probe pass, per-bucket
-            # mass + approx distinct keys — and picks; the decision and
-            # its evidence land in the commit lineage
-            # (``collapse_policy``) so every bootstrap is auditable.
-            from ..operators.salting import choose_collapse, winners_join
+        rows = batch = changes.select(*FILE_COLS)
+        carry, affected, pstats = cur["files"], None, None
+        cow = bool(carry) and self._mode == "cow"
+        if cow:
+            batch.persist()
+        try:
+            if not carry:
+                # Looked up at call time: instrumentation and tests
+                # patch these names on the salting module.
+                from ..operators.salting import choose_collapse, winners_join
 
-            policy, pstats = (
-                choose_collapse(changes, self.n_buckets)
-                if collapse == "auto"
-                else (collapse, None)
-            )
-            if policy == "direct":
-                data = self._bucket_collapse(changes.select(*FILE_COLS))
-            else:
-                data = self._bucket_collapse(
-                    winners_join(changes, n_salts=n_salts)
-                )
-            files = self._write_commit_files(data.select(*FILE_COLS, "_bucket"))
-            affected = {e["bucket"] for e in files}
-        elif self._mode == "mor":
-            # Merge-on-read: append the batch's per-key winners as delta
-            # files; current data is untouched (reads reduce, compact()
-            # folds).  A micro-batch commit costs O(batch), never
-            # O(affected buckets) — the COW floor of rewriting every
-            # touched bucket per trigger disappears.  The bucket window
-            # alone is the complete LWW reduce here (like the COW
-            # incremental path): a micro-batch's hot-key mass is bounded
-            # by the batch size, so the salted winners_join pre-pass
-            # would only add two shuffles of the same rows.
-            data = self._bucket_collapse(changes.select(*FILE_COLS))
-            new_entries = self._write_commit_files(data.select(*FILE_COLS, "_bucket"))
-            affected = {e["bucket"] for e in new_entries}
-            files = cur["files"] + new_entries
-        else:
-            batch_rows = changes.select(*FILE_COLS)
-            batch_rows.persist()
-            try:
+                policy, pstats = choose_collapse(changes, self.n_buckets)
+                if policy == "salted":
+                    rows = winners_join(changes)
+            elif cow:
                 affected = {
                     r["_bucket"]
-                    for r in batch_rows.select(
-                        bucket_expr(self.n_buckets).alias("_bucket")
-                    )
+                    for r in batch.select(bucket_expr(self.n_buckets).alias("_bucket"))
                     .distinct()
                     .collect()
                 }
-                keep = [f for f in cur["files"] if f["bucket"] not in affected]
+                carry = [f for f in cur["files"] if f["bucket"] not in affected]
                 touch = [f["path"] for f in cur["files"] if f["bucket"] in affected]
-                rows = self._read_files(touch).unionByName(batch_rows)
-                files = keep + self._write_commit_files(self._bucket_collapse(rows))
-            finally:
-                batch_rows.unpersist()
+                rows = self._read_files(touch).unionByName(batch)
+            # the select pins the file column order: winners_join emits
+            # its columns in a different order
+            new = self._write_commit_files(
+                self._bucket_collapse(rows).select(*FILE_COLS, "_bucket")
+            )
+        finally:
+            if cow:
+                batch.unpersist()
+        if affected is None:
+            affected = {e["bucket"] for e in new}
+        files = carry + new
 
         def lineage() -> dict:
             # resolved after the write: a callable extra_lineage may read

@@ -46,6 +46,7 @@ from ..functions.textops import (
     minhash_signatures_text,
 )
 from ..plans.table import SnapshotTable
+from .pipeline import start_foreach_batch
 
 #: signature parameters — fixed per index (changing them requires a
 #: rebuild, like changing a tokenizer); 32 hashes / 8 bands of 4 rows
@@ -260,11 +261,4 @@ def start_dedup_index_stream(
     def apply_fn(batch_df: DataFrame, batch_id: int) -> None:
         index.merge_apply(signature_events(batch_df), batch_id)
 
-    writer = (
-        feed.writeStream.foreachBatch(apply_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(feed, apply_fn, checkpoint_dir, available_now)

@@ -31,6 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.table import SnapshotTable
 from ..schemas import TRANSCRIPT_COLS
+from .pipeline import start_foreach_batch
 
 
 def derived_events(
@@ -265,14 +266,7 @@ def start_rollup_stream(
         else:
             gold.merge_apply(rollup_events(batch_df, bronze), batch_id)
 
-    writer = (
-        feed.writeStream.foreachBatch(apply_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(feed, apply_fn, checkpoint_dir, available_now)
 
 
 def start_derived_stream(
@@ -304,11 +298,4 @@ def start_derived_stream(
             batch_id,
         )
 
-    writer = (
-        feed.writeStream.foreachBatch(apply_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(feed, apply_fn, checkpoint_dir, available_now)

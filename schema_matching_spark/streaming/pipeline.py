@@ -45,7 +45,6 @@ def start_cdc_stream(
     checkpoint_dir: str,
     watermark: str = "10 minutes",
     max_files_per_trigger: int = 1,
-    n_salts: int = 16,
     available_now: bool = True,
     evolver=None,
     maintenance_every: int | None = None,
@@ -199,9 +198,7 @@ def start_cdc_stream(
             return out
 
         try:
-            table.merge_apply(
-                observed, batch_id, n_salts=n_salts, extra_lineage=lineage
-            )
+            table.merge_apply(observed, batch_id, extra_lineage=lineage)
         finally:
             for df in persisted:
                 df.unpersist()
@@ -212,8 +209,18 @@ def start_cdc_stream(
                 table.compact()
                 table.expire_snapshots(keep_n=keep_snapshots)
 
+    return start_foreach_batch(deduped, apply_fn, checkpoint_dir, available_now)
+
+
+def start_foreach_batch(
+    stream: DataFrame, apply_fn, checkpoint_dir: str, available_now: bool
+) -> StreamingQuery:
+    """Start ``stream`` as a checkpointed ``foreachBatch`` query calling
+    ``apply_fn(batch_df, batch_id)`` — the sink shape every stream in
+    this package shares.  ``available_now=True`` makes it a bounded
+    catch-up run (process everything present, then stop)."""
     writer = (
-        deduped.writeStream.foreachBatch(apply_fn)
+        stream.writeStream.foreachBatch(apply_fn)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )

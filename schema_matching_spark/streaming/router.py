@@ -31,13 +31,13 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.table import SnapshotTable
 from ..schemas import CHANGE_COLS
+from .pipeline import start_foreach_batch
 
 
 def route_batch(
     tables: dict[str, SnapshotTable],
     parsed: DataFrame,
     batch_id: str | int,
-    n_salts: int = 16,
     unknown_dir: str | None = None,
 ) -> dict[str, int]:
     """Apply one parsed multi-table micro-batch (CHANGE_COLS +
@@ -65,7 +65,7 @@ def route_batch(
             if name not in present:
                 continue
             slice_df = parsed.where(F.col("_table") == name).select(*CHANGE_COLS)
-            tables[name].merge_apply(slice_df, batch_id, n_salts=n_salts)
+            tables[name].merge_apply(slice_df, batch_id)
             routed[name] = present[name]
         unknown = {k: v for k, v in present.items() if k not in tables}
         if unknown:
@@ -95,7 +95,6 @@ def start_router_stream(
     tables: dict[str, SnapshotTable],
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    n_salts: int = 16,
     available_now: bool = True,
     unknown_dir: str | None = None,
 ) -> StreamingQuery:
@@ -115,15 +114,6 @@ def start_router_stream(
             .select(*CHANGE_COLS, "_table")
             .dropDuplicates(["lsn", "conv_id", "turn_idx", "_table"])
         )
-        route_batch(
-            tables, parsed, batch_id, n_salts=n_salts, unknown_dir=unknown_dir
-        )
+        route_batch(tables, parsed, batch_id, unknown_dir=unknown_dir)
 
-    writer = (
-        raw.writeStream.foreachBatch(apply_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(raw, apply_fn, checkpoint_dir, available_now)

@@ -42,6 +42,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.table import SnapshotTable
 from ..schemas import CHANGE_COLS
+from .pipeline import start_foreach_batch
 
 #: gate columns riding next to CHANGE_COLS through the pending store
 GATE_COLS = [*CHANGE_COLS, "_txn_id", "_txn_count"]
@@ -122,7 +123,6 @@ def apply_txn_batch(
     batch: DataFrame,
     batch_id,
     pending_dir: str,
-    n_salts: int = 16,
 ) -> dict:
     """One gated apply: union the carried pending set, split by
     readiness, persist the new pending set (pointer flip), merge the
@@ -143,7 +143,6 @@ def apply_txn_batch(
             table.merge_apply(
                 ready_changes,
                 batch_id,
-                n_salts=n_salts,
                 extra_lineage={
                     "txn_gate": {"ready": n_ready, "held": n_pending}
                 },
@@ -166,7 +165,6 @@ def flush_pending(
     table: SnapshotTable,
     pending_dir: str,
     batch_id: str = "txn-flush",
-    n_salts: int = 16,
 ) -> int:
     """Force-apply whatever the gate is still holding.  ONLY for feeds
     whose WAL is known final AND whose events carry no event_count (a
@@ -181,7 +179,7 @@ def flush_pending(
     rows = pending.select(*CHANGE_COLS)
     n = rows.count()
     if n:
-        table.merge_apply(rows, batch_id, n_salts=n_salts)
+        table.merge_apply(rows, batch_id)
     return n
 
 
@@ -192,7 +190,6 @@ def start_txn_cdc_stream(
     checkpoint_dir: str,
     pending_dir: str,
     max_files_per_trigger: int = 1,
-    n_salts: int = 16,
     available_now: bool = True,
 ) -> StreamingQuery:
     """Tail a Debezium-envelope WAL and apply it transaction-atomically:
@@ -218,13 +215,6 @@ def start_txn_cdc_stream(
     def apply_fn(batch_df: DataFrame, batch_id: int) -> None:
         tagged = parse_envelope_tagged(batch_df)
         good = tagged.where(F.col("dlq_reason").isNull()).select(*GATE_COLS)
-        apply_txn_batch(table, good, batch_id, pending_dir, n_salts=n_salts)
+        apply_txn_batch(table, good, batch_id, pending_dir)
 
-    writer = (
-        raw.writeStream.foreachBatch(apply_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(raw, apply_fn, checkpoint_dir, available_now)

@@ -293,7 +293,10 @@ def main() -> None:
             "protocol": "sustained_chunked_mor",
             "events": args.events,
             "chunks": args.chunks,
-            "compact_every": args.compact_every,
+            # the planner ignores the fixed cadence: record its knobs
+            "compact_every": (
+                None if args.policy == "planner" else args.compact_every
+            ),
             "maintenance_policy": args.policy,
             "n_buckets": args.buckets,
             "shuffle_partitions": args.shuffle,
@@ -314,6 +317,9 @@ def main() -> None:
             },
             "rewarm_events": bench.REWARM_EVENTS,
         }
+        if args.policy == "planner":
+            entry["max_compact_buckets"] = args.max_compact_buckets
+            entry["max_delta_files"] = args.max_delta_files
         with open(os.path.join(HERE, "BENCH", "headline_runs.jsonl"), "a") as f:
             f.write(json.dumps(entry) + "\n")
         print(json.dumps(entry), flush=True)

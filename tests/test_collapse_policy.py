@@ -11,6 +11,7 @@ on uniform logs and salted on hot-key / high-duplication logs, and
 import pytest
 from pyspark.sql import functions as F
 
+from schema_matching_spark.operators import salting
 from schema_matching_spark.operators.apply import replay
 from schema_matching_spark.operators.salting import choose_collapse, collapse_probe
 from schema_matching_spark.operators.verify import content_hash, states_equal
@@ -39,12 +40,15 @@ def whale_log(spark):
     return df
 
 
-def test_direct_salted_and_auto_states_identical(spark, tmp_path, log):
+def test_direct_salted_and_auto_states_identical(spark, tmp_path, log, monkeypatch):
     expected = expected_state(log)
     states = {}
     for mode in ("direct", "salted", "auto"):
         tbl = SnapshotTable(spark, str(tmp_path / mode), n_buckets=8)
-        replay(tbl, log, collapse=mode)
+        with monkeypatch.context() as mp:
+            if mode != "auto":  # force the path through the probe seam
+                mp.setattr(salting, "choose_collapse", lambda log, n: (mode, None))
+            replay(tbl, log)
         states[mode] = tbl.read()
         assert states_equal(states[mode], expected), mode
     h = {m: content_hash(df) for m, df in states.items()}
@@ -75,7 +79,7 @@ def test_probe_stats_are_sane(log):
 
 def test_lineage_records_policy_decision(spark, tmp_path, log):
     tbl = SnapshotTable(spark, str(tmp_path / "audited"), n_buckets=8)
-    replay(tbl, log)  # default collapse="auto"
+    replay(tbl, log)
     lin = tbl.manifest()["lineage"]
     entry = lin[-1].get("collapse_policy")
     assert entry is not None
@@ -83,13 +87,16 @@ def test_lineage_records_policy_decision(spark, tmp_path, log):
     assert entry["total_rows"] == N
 
 
-def test_whale_replay_correct_under_both_policies(spark, tmp_path, whale_log):
+def test_whale_replay_correct_under_both_policies(
+    spark, tmp_path, whale_log, monkeypatch
+):
     """Skewed input must land bit-identically whichever path runs —
     the policy is a cost decision, never a semantic one."""
     expected = expected_state(whale_log)
     for mode in ("direct", "salted"):
         tbl = SnapshotTable(spark, str(tmp_path / f"w_{mode}"), n_buckets=8)
-        replay(tbl, whale_log, collapse=mode)
+        monkeypatch.setattr(salting, "choose_collapse", lambda log, n: (mode, None))
+        replay(tbl, whale_log)
         assert states_equal(tbl.read(), expected), mode
 
 
@@ -113,9 +120,3 @@ def test_low_cardinality_log_routes_salted(spark):
     assert stats["nonempty_buckets"] <= 6
     assert stats["bucket_skew"] > 4.0
     assert policy == "salted"
-
-
-def test_merge_apply_rejects_unknown_collapse(spark, tmp_path, log):
-    tbl = SnapshotTable(spark, str(tmp_path / "bad"), n_buckets=8)
-    with pytest.raises(ValueError, match="collapse"):
-        tbl.merge_apply(log, "b0", collapse="Direct")

@@ -182,7 +182,7 @@ def test_streaming_drift_into_mor_table(spark, base_log, tmp_path):
     def apply_fn(batch_df, batch_id):
         if batch_df.count() == 0:
             return
-        table.merge_apply(aligner(batch_df), batch_id, n_salts=4)
+        table.merge_apply(aligner(batch_df), batch_id)
 
     q = (
         stream.writeStream.foreachBatch(apply_fn)

@@ -106,27 +106,36 @@ def test_partition_pruning_on_partitioned_layout(spark):
 
 
 def test_merge_apply_broadcasts_small_change_sets(spark, tmp_path):
-    """Incremental merge of a small batch against current bucket rows is
-    a hash aggregation over a union — confirm no sort-merge join or
-    cartesian sneaks into the reduce (the plan is agg-only by design)."""
+    """Incremental COW merge of a small batch: the union of the batch
+    with the stored rows of exactly the buckets it touches goes through
+    the bucket collapse; the lineage names those buckets and every
+    other file entry is carried into the new snapshot unchanged."""
     from schema_matching_spark.operators.apply import apply_batch
-    from schema_matching_spark.plans.table import SnapshotTable
+    from schema_matching_spark.plans.table import SnapshotTable, bucket_expr
     from schema_matching_spark.sources.generator import changes
 
     table = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=4)
     apply_batch(table, changes(spark, 2000, n_conv=20, turns_per_conv=10), "b0")
     v = table.current_version()
     assert v == 1
-    # second small batch exercises the bucket-pruned incremental path
-    apply_batch(
-        table,
-        changes(spark, 500, n_conv=20, turns_per_conv=10, lsn_start=2000),
-        "b1",
-    )
+    before = table.manifest()["files"]
+    # second small batch (3 conversations) exercises the bucket-pruned
+    # incremental path
+    batch = changes(
+        spark, 500, n_conv=20, turns_per_conv=10, lsn_start=2000
+    ).where(F.col("conv_id").isin("conv-00000001", "conv-00000002", "conv-00000003"))
+    apply_batch(table, batch, "b1")
     assert table.current_version() == 2
     m = table.manifest()
     assert m["lineage"][-1]["op"] == "merge"
-    assert len(m["lineage"][-1]["affected_buckets"]) <= 4
+    touched = {
+        r["b"] for r in batch.select(bucket_expr(4).alias("b")).distinct().collect()
+    }
+    assert m["lineage"][-1]["affected_buckets"] == sorted(touched)
+    untouched = [f for f in before if f["bucket"] not in touched]
+    assert untouched  # 3 conversations cannot cover all 4 buckets
+    assert [f for f in m["files"] if f["bucket"] not in touched] == untouched
+    assert all(f["bucket"] in touched for f in m["files"] if f not in untouched)
 
 
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):

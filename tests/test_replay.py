@@ -176,7 +176,7 @@ def test_crash_safety_of_commit_protocol(spark, tmp_path):
 
     # recovery: the next real merge takes version v+1, overwriting the
     # orphan manifest atomically, and the final state is exact
-    apply_batch(table, batch, "b1", n_salts=4)
+    apply_batch(table, batch, "b1")
     assert table.current_version() == v1 + 1
     assert states_equal(
         table.read(), expected_state(b0.unionByName(batch))
@@ -189,7 +189,7 @@ def test_merge_on_read_mode(spark, tmp_path):
     with fewer files; mode survives reopen."""
     table = SnapshotTable(spark, str(tmp_path / "mor"), n_buckets=4, mode="mor")
     b0 = changes(spark, 2000, n_conv=15, turns_per_conv=10, partitions=2)
-    apply_batch(table, b0, "b0", n_salts=4)
+    apply_batch(table, b0, "b0")
     batches = [b0]
     for i in range(1, 4):
         b = changes(
@@ -197,7 +197,7 @@ def test_merge_on_read_mode(spark, tmp_path):
             lsn_start=2000 + i * 400, partitions=2,
         )
         batches.append(b)
-        apply_batch(table, b, f"b{i}", n_salts=4)
+        apply_batch(table, b, f"b{i}")
 
     full = batches[0]
     for b in batches[1:]:
@@ -206,11 +206,11 @@ def test_merge_on_read_mode(spark, tmp_path):
 
     # exactly-once: replaying an applied batch_id changes nothing
     v = table.current_version()
-    apply_batch(table, batches[1], "b1", n_salts=4)
+    apply_batch(table, batches[1], "b1")
     assert table.current_version() == v
 
     # stale-lsn redelivery in a NEW batch id is a per-key no-op
-    apply_batch(table, batches[1], "b1-redelivered", n_salts=4)
+    apply_batch(table, batches[1], "b1-redelivered")
     assert states_equal(table.read(), expected_state(full))
 
     n_files_before = len(table.manifest()["files"])

@@ -100,7 +100,7 @@ def test_redelivery_beyond_watermark_is_absorbed_by_lww(spark, tmp_path):
     table = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=4)
     run_stream_to_completion(
         spark, wal, table, str(tmp_path / "cp"),
-        watermark="1 second", max_files_per_trigger=1, n_salts=4,
+        watermark="1 second", max_files_per_trigger=1,
     )
     assert states_equal(table.read(), expected_state(log))
 
@@ -122,7 +122,7 @@ def test_progress_listener_ledger(spark, tmp_path):
         table = SnapshotTable(spark, str(tmp_path / "tbl"), n_buckets=4)
         run_stream_to_completion(
             spark, wal, table, str(tmp_path / "cp"),
-            max_files_per_trigger=1, n_salts=4,
+            max_files_per_trigger=1,
         )
         # listener callbacks are async — wait for the ledger to drain
         import time as _t
