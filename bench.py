@@ -20,12 +20,16 @@ truncate it again (enforced by tests/test_bench_output.py):
    "cdc_replay": {"events": N, "replay_sec": s,
                   "events_per_sec": r, "verified": true}, ...}
 
-Flags (used by bench_scaling.py): --cpus N, --events N, --cdc-only.
+Flags: --cpus N (default host_cpus()), --events N, --cdc-only, --sf-dir.
+
+The leg helpers (scratch_root, host_cpus, maybe_rewarm, best_of,
+fresh_tables, warm_up) are shared by the scripts/ bench legs.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import shutil
@@ -55,6 +59,22 @@ def _scratch_base() -> str | None:
     return "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 
+@contextlib.contextmanager
+def scratch_root(prefix: str):
+    """A fresh scratch directory (on tmpfs when present), removed on exit."""
+    root = tempfile.mkdtemp(prefix=prefix, dir=_scratch_base())
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def host_cpus() -> int:
+    """Local width of every bench leg: $SPARK_GRAFT_CPUS, else the
+    host's core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+
+
 #: re-warm ledger — every probe/prewarm taken between timed sections,
 #: embedded in the output JSON so the capture is self-describing.
 REWARM_EVENTS: list[dict] = []
@@ -77,9 +97,6 @@ def maybe_rewarm(tag: str, gib: float = 12.0) -> None:
         prewarm_pages,
     )
 
-    # big-input legs (4e8+) allocate tens of GB of fresh pages per
-    # timed rep — let the leg harness scale the pool it provisions
-    gib = float(os.environ.get("SPARK_GRAFT_REWARM_GIB", gib))
     ft = first_touch_gbs(mib=128, budget_sec=1.0)
     ev: dict = {"tag": tag, "first_touch_gbs": round(ft, 2)}
     if ft < 2.0:
@@ -87,112 +104,103 @@ def maybe_rewarm(tag: str, gib: float = 12.0) -> None:
     REWARM_EVENTS.append(ev)
 
 
-def bench_cdc(spark, n_events: int, n_buckets: int = 128, partitions: int = 64,
-              warmup: bool = True,
-              reps: int = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))):
+def best_of(reps: int, fn, rewarm: str | None = None, setup=None):
+    """Time ``reps`` sequential calls of ``fn()``; returns (best secs,
+    per-rep secs, the last call's result).  Before each rep, untimed:
+    ``setup(rep)``, then ``maybe_rewarm(f"{rewarm}{rep}")`` when a tag
+    is given.  The best rep is the least host-contaminated observation
+    (BENCH/BASELINE.md "sandbox pathology")."""
+    secs, result = [], None
+    for rep in range(reps):
+        if setup is not None:
+            setup(rep)
+        if rewarm is not None:
+            maybe_rewarm(f"{rewarm}{rep}")
+        t0 = time.time()
+        result = fn()
+        secs.append(time.time() - t0)
+    return min(secs), secs, result
+
+
+def fresh_tables(spark, root: str, n_buckets: int = 128):
+    """A ``best_of`` setup giving each rep a fresh empty table
+    ``root/tbl<rep>``; the previous rep's table is removed first, so
+    only the last one is left (for the leg's verify).  Returns
+    (tables, setup); ``tables[-1]`` is the current rep's table."""
+    from schema_matching_spark.plans.table import SnapshotTable
+
+    tables: list = []
+
+    def setup(rep: int) -> None:
+        if tables:
+            shutil.rmtree(tables[-1].root, ignore_errors=True)
+        tables.append(SnapshotTable(
+            spark, os.path.join(root, f"tbl{rep}"), n_buckets=n_buckets
+        ))
+
+    return tables, setup
+
+
+def warm_up(spark, n_buckets: int = 128, partitions: int = 32) -> None:
+    """Untimed 200k-event replay into a throwaway table: JIT-compiles
+    the codegen'd merge stages and warms the JVM code cache.  At the
+    north metric's 10^10 events warm-up is noise; at bench scale it
+    would dominate the first timed rep."""
+    from schema_matching_spark.operators.apply import replay
+    from schema_matching_spark.plans.table import SnapshotTable
+    from schema_matching_spark.sources.generator import changes
+
+    with scratch_root("bench_warm_") as root:
+        replay(
+            SnapshotTable(spark, root, n_buckets=n_buckets),
+            changes(spark, 200_000, n_conv=1000, turns_per_conv=50,
+                    partitions=partitions),
+        )
+
+
+def bench_replay(spark, n_events: int, hot_pct: int = 0, reps: int = 3,
+                 warmup: bool = True, n_buckets: int = 128,
+                 partitions: int = 64):
+    """Flagship replay leg: materialize the WAL untimed, time best-of-
+    ``reps`` full replays into fresh tables (re-warm before each rep),
+    then verify the final state's content hash against the oracle.
+    ``hot_pct`` plants one hot conversation owning that share of ALL
+    events — the skew case the salted collapse exists for."""
     from schema_matching_spark.operators.apply import replay
     from schema_matching_spark.operators.verify import content_hash
-    from schema_matching_spark.plans.table import SnapshotTable
     from schema_matching_spark.sources.generator import changes, expected_state
 
-    root = tempfile.mkdtemp(prefix="bench_cdc_", dir=_scratch_base())
-    try:
-        if warmup:
-            # untimed warm-up replay: JIT-compiles the codegen'd stages
-            # and warms the JVM code cache.  At the north metric's 10^10
-            # events, warm-up is noise; at bench scale it would dominate.
-            wt = SnapshotTable(
-                spark, os.path.join(root, "warm_tbl"), n_buckets=n_buckets
-            )
-            replay(
-                wt,
-                changes(
-                    spark, 200_000, n_conv=1000, turns_per_conv=50,
-                    partitions=partitions,
-                ),
-            )
+    if warmup:
+        warm_up(spark, n_buckets=n_buckets, partitions=partitions)
+    with scratch_root("bench_replay_") as root:
         # materialize the WAL untimed — the metric is events/sec
         # *replaying* a CDC log, so the timed section starts at the
         # parquet scan, not at synthetic generation
         wal = os.path.join(root, "wal")
         changes(
             spark, n_events, n_conv=max(n_events // 200, 100),
-            turns_per_conv=50, partitions=partitions,
-        ).write.parquet(wal)
-        log = spark.read.parquet(wal)
-
-        # best-of-N timed replays (N=3, same protocol as
-        # bench_scaling.py so driver-measured and claimed numbers use
-        # identical warmup/rep rules): the sandbox host's
-        # memory-provisioning path injects multi-second noise
-        # (BENCH/BASELINE.md "sandbox pathology"); the best rep is the
-        # least-contaminated observation.
-        rep_times = []
-        table = None
-        for rep in range(reps):
-            maybe_rewarm(f"cdc_replay_rep{rep}")
-            tdir = os.path.join(root, f"tbl{rep}")
-            table = SnapshotTable(spark, tdir, n_buckets=n_buckets)
-            t0 = time.time()
-            replay(table, log)
-            rep_times.append(time.time() - t0)
-            if rep < reps - 1:
-                shutil.rmtree(tdir, ignore_errors=True)
-        replay_sec = min(rep_times)
-        t1 = time.time()
-        verified = content_hash(table.read()) == content_hash(expected_state(log))
-        verify_sec = time.time() - t1
-        return {
-            "events": n_events,
-            "replay_sec": round(replay_sec, 3),
-            "replay_reps_sec": [round(r, 3) for r in rep_times],
-            "events_per_sec": round(n_events / replay_sec, 1),
-            "verify_sec": round(verify_sec, 3),
-            "verified": bool(verified),
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def bench_cdc_skewed(spark, n_events: int, n_buckets: int = 128,
-                     partitions: int = 64, hot_pct: int = 30):
-    """Replay with a planted hot conversation owning ``hot_pct``% of
-    ALL events — the skew case the salted collapse exists for."""
-    from schema_matching_spark.operators.apply import replay
-    from schema_matching_spark.operators.verify import content_hash
-    from schema_matching_spark.plans.table import SnapshotTable
-    from schema_matching_spark.sources.generator import changes, expected_state
-
-    root = tempfile.mkdtemp(prefix="bench_skew_", dir=_scratch_base())
-    try:
-        wal = os.path.join(root, "wal")
-        changes(
-            spark, n_events, n_conv=max(n_events // 200, 100),
             turns_per_conv=50, hot_pct=hot_pct, partitions=partitions,
         ).write.parquet(wal)
         log = spark.read.parquet(wal)
-        best = None
-        table = None
-        for rep in range(2):
-            maybe_rewarm(f"cdc_skew_rep{rep}")
-            tdir = os.path.join(root, f"tbl{rep}")
-            table = SnapshotTable(spark, tdir, n_buckets=n_buckets)
-            t0 = time.time()
-            replay(table, log)
-            el = time.time() - t0
-            best = el if best is None else min(best, el)
-            if rep == 0:
-                shutil.rmtree(tdir, ignore_errors=True)
-        verified = content_hash(table.read()) == content_hash(expected_state(log))
+
+        tables, fresh = fresh_tables(spark, root, n_buckets=n_buckets)
+        best, secs, _ = best_of(
+            reps, lambda: replay(tables[-1], log),
+            rewarm="cdc_skew_rep" if hot_pct else "cdc_replay_rep",
+            setup=fresh,
+        )
+        t1 = time.time()
+        verified = (content_hash(tables[-1].read())
+                    == content_hash(expected_state(log)))
         return {
             "events": n_events,
             "hot_pct": hot_pct,
             "replay_sec": round(best, 3),
+            "replay_reps_sec": [round(r, 3) for r in secs],
             "events_per_sec": round(n_events / best, 1),
+            "verify_sec": round(time.time() - t1, 3),
             "verified": bool(verified),
         }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def bench_cdc_incremental(
@@ -207,8 +215,7 @@ def bench_cdc_incremental(
     from schema_matching_spark.plans.table import SnapshotTable
     from schema_matching_spark.sources.generator import changes
 
-    root = tempfile.mkdtemp(prefix="bench_inc_", dir=_scratch_base())
-    try:
+    with scratch_root("bench_inc_") as root:
         n_conv = max(base_events // 200, 100)
         table = SnapshotTable(
             spark, os.path.join(root, "tbl"), n_buckets=n_buckets, mode=mode
@@ -248,8 +255,6 @@ def bench_cdc_incremental(
             "changelog_changes_emitted": n_changes,
             "final_version": table.current_version(),
         }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def bench_scan_pruning(
@@ -268,8 +273,7 @@ def bench_scan_pruning(
     from schema_matching_spark.plans.table import SnapshotTable
     from schema_matching_spark.sources.generator import changes
 
-    root = tempfile.mkdtemp(prefix="bench_scan_", dir=_scratch_base())
-    try:
+    with scratch_root("bench_scan_") as root:
         n_conv = max(base_events // 200, 100)
         table = SnapshotTable(
             spark, os.path.join(root, "tbl"), n_buckets=n_buckets
@@ -314,8 +318,6 @@ def bench_scan_pruning(
             "full_read_filter_sec": round(full_sec, 3),
             "speedup": round(full_sec / scan_sec, 2) if scan_sec > 0 else None,
         }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def bench_point_lookup(
@@ -336,8 +338,7 @@ def bench_point_lookup(
     from schema_matching_spark.plans.table import SnapshotTable, lww_reduce
     from schema_matching_spark.sources.generator import changes
 
-    root = tempfile.mkdtemp(prefix="bench_lookup_", dir=_scratch_base())
-    try:
+    with scratch_root("bench_lookup_") as root:
         n_conv = max(base_events // 200, 100)
         probe = "conv-00000007"
         table = SnapshotTable(
@@ -359,27 +360,22 @@ def bench_point_lookup(
             ).where(F.col("conv_id") != probe)
             apply_batch(table, delta, f"d{i}")
 
-        bloom_sec = blind_sec = None
-        rows_bloom = rows_blind = 0
-        for _ in range(2):
-            t0 = time.time()
-            rows_bloom = table.lookup(probe).count()
-            el = time.time() - t0
-            bloom_sec = el if bloom_sec is None else min(bloom_sec, el)
+        bloom_sec, _, rows_bloom = best_of(
+            2, lambda: table.lookup(probe).count()
+        )
         stats = dict(table.last_lookup_stats)
-        # bloom-blind baseline: same bucket-id evaluation, then read
-        # EVERY file of the probe's bucket (what lookup() does on a
-        # bloom-less table)
-        for _ in range(2):
-            t1 = time.time()
+
+        def blind() -> int:
+            # same bucket-id evaluation, then read EVERY file of the
+            # probe's bucket (what lookup() does on a bloom-less table)
             bucket_paths = [f["path"] for f in table._bucket_entries(probe)]
-            rows_blind = (
+            return (
                 lww_reduce(table._read_files(bucket_paths)
                            .where(F.col("conv_id") == probe))
                 .where(F.col("op") != "D").count()
             )
-            el = time.time() - t1
-            blind_sec = el if blind_sec is None else min(blind_sec, el)
+
+        blind_sec, _, rows_blind = best_of(2, blind)
         assert rows_bloom == rows_blind, (rows_bloom, rows_blind)
         return {
             "base_events": base_events,
@@ -390,8 +386,6 @@ def bench_point_lookup(
             "lookup_blind_sec": round(blind_sec, 3),
             "speedup": round(blind_sec / bloom_sec, 2) if bloom_sec > 0 else None,
         }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 #: Hard cap for the stdout headline line.  The driver captures only the
@@ -498,7 +492,7 @@ def write_full_capture(out: dict) -> str | None:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", type=int, default=host_cpus())
     ap.add_argument(
         "--events", type=int,
         default=int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "10000000")),
@@ -532,7 +526,7 @@ def main() -> None:
         print(f"[host] prewarm: {json.dumps(prewarm)}",
               file=sys.stderr, flush=True)
 
-    cpus = int(args.cpus)
+    cpus = args.cpus
     extra = {}
     if _scratch_base():
         extra["spark.local.dir"] = os.path.join(_scratch_base(), "bench_spark_local")
@@ -550,10 +544,11 @@ def main() -> None:
     timings: dict[str, float] = {}
     inc = bench_cdc_incremental(spark, mode="cow")
     inc_mor = bench_cdc_incremental(spark, mode="mor")
-    # Flagship replay next (best-of-3 with per-rep re-warm gates —
-    # self-protecting against regime decay in a way the incrementals
-    # are not).
-    cdc = bench_cdc(spark, args.events, partitions=max(cpus * 2, 16))
+    # Flagship replay next (warm-up + best-of-3 with per-rep re-warm
+    # gates — self-protecting against regime decay in a way the
+    # incrementals are not).
+    partitions = max(cpus * 2, 16)
+    cdc = bench_replay(spark, args.events, partitions=partitions)
     # skew evidence (north rule: hot-key skew handled EXPLICITLY): the
     # same replay with 30% of all events landing on ONE conversation.
     # The collapse probe detects the hot bucket and routes this replay
@@ -562,7 +557,8 @@ def main() -> None:
     # salting, one reducer would own 3M events.  (The uniform replay
     # above probes the same way and takes the direct single-shuffle
     # collapse instead — operators/salting.choose_collapse.)
-    cdc_skew = bench_cdc_skewed(spark, args.events, partitions=max(cpus * 2, 16))
+    cdc_skew = bench_replay(spark, args.events, hot_pct=30, reps=2,
+                            warmup=False, partitions=partitions)
     scan_prune = bench_scan_pruning(spark)
     point_lookup = bench_point_lookup(spark)
     timings["cdc_incremental_cow"] = inc["incremental_sec"]
@@ -581,12 +577,9 @@ def main() -> None:
         # what a 100 TB run amortizes to.
         maybe_rewarm("headline_queries")
         for name in HEADLINE:
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                queries[name](spark, args.sf_dir).collect()
-                el = time.time() - t0
-                best = el if best is None else min(best, el)
+            best, _, _ = best_of(
+                2, lambda: queries[name](spark, args.sf_dir).collect()
+            )
             timings[name] = round(best, 3)
 
     timings["cdc_replay"] = cdc["replay_sec"]

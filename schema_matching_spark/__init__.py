@@ -30,12 +30,10 @@ Layout (SURVEY.md §7.1):
 
 __version__ = "0.1.0"
 
-#: Replay hot-path generation tag, stamped on every BENCH/runs.jsonl
-#: entry.  The cross-run debiased scaling estimator takes min-time per
-#: config ACROSS runs — sound against host noise but unsound across
-#: engine changes (a faster 32-leg from a new engine against an 8-leg
-#: minimum recorded under the old engine would fake efficiency), so
-#: minima are only ever compared within one engine tag.
+#: Replay hot-path generation tag, stamped on every bench.py capture
+#: and BENCH/headline_runs.jsonl row.  Bench numbers (cross-run minima
+#: above all) are only compared within one engine tag: a best time
+#: recorded under an older engine says nothing about the current one.
 #:   v1-salted            rounds 1-5a: bootstrap always salted winner
 #:                        search + join-back
 #:   v2-adaptive-collapse round 5: probed direct/salted collapse policy

@@ -7,8 +7,8 @@ Configs chosen for the 100TB design point (SURVEY.md §4.2):
   engine is a pandas/Arrow UDF (BASELINE.json input_hint: "no per-row
   Python").
 * shuffle.partitions scaled to parallelism — on a real cluster this is
-  set per-job by spark-submit; locally we match core count so the
-  local[8]-vs-local[32] scaling bench is apples-to-apples.
+  set per-job by spark-submit; locally callers pass a width matched to
+  the core count (the bench legs use bench.host_cpus()).
 """
 
 from __future__ import annotations

@@ -1,9 +1,10 @@
 """Deterministic transcript change-log generator (SURVEY.md §2.B B10).
 
-Both cluster sizes must see *identical* input (the scaling criterion in
-BASELINE.md compares local[8] vs local[32] on the same log), and any
-prefix must be reproducible for resume tests — so every column is a pure
-expression keyed on ``spark.range`` ids: no RNG state, no wall clock.
+Every run must see *identical* input whatever its width or partitioning
+(bench and perfbench seeds compare runs on the same log), and any prefix
+or lsn range must be reproducible for resume tests and chunked
+generation — so every column is a pure expression keyed on
+``spark.range`` ids: no RNG state, no wall clock.
 Generation rules follow FIXTURES.md §1–2.
 
 The expected final state of any log prefix is computable independently

@@ -30,12 +30,17 @@ import json
 import os
 import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import REWARM_EVENTS, _scratch_base, maybe_rewarm  # noqa: E402
+from bench import (  # noqa: E402
+    REWARM_EVENTS,
+    host_cpus,
+    maybe_rewarm,
+    scratch_root,
+    warm_up,
+)
 
 TAIL = 500_000
 OVERLAP = 100_000
@@ -49,8 +54,7 @@ def run_one(spark, n_events: int, n_buckets: int, partitions: int) -> dict:
     from schema_matching_spark.plans.table import SnapshotTable
     from schema_matching_spark.sources.generator import changes, expected_state
 
-    root = tempfile.mkdtemp(prefix="bench_boot_", dir=_scratch_base())
-    try:
+    with scratch_root("bench_boot_") as root:
         fence = n_events - TAIL - 1
         wal = os.path.join(root, "wal")
         # FIXED key space (10k convs x 50 turns = 500k keys) across all
@@ -104,35 +108,23 @@ def run_one(spark, n_events: int, n_buckets: int, partitions: int) -> dict:
             "speedup": round(replay_best / boot_best, 2),
             "verified": bool(hash_a == hash_b),
         }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--histories", default="2000000,8000000")
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
     from schema_matching_spark.session import get_spark
 
+    cpus = host_cpus()
     spark = get_spark(
-        "bench-bootstrap", master=f"local[{args.cpus}]", shuffle_partitions=args.cpus
+        "bench-bootstrap", master=f"local[{cpus}]", shuffle_partitions=cpus
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm-up (untimed) — JIT the codegen'd merge stages, same as bench.py
-    from schema_matching_spark.operators.apply import replay
-    from schema_matching_spark.plans.table import SnapshotTable
-    from schema_matching_spark.sources.generator import changes
-
     maybe_rewarm("session_start")
-    wroot = tempfile.mkdtemp(prefix="boot_warm_", dir=_scratch_base())
-    replay(
-        SnapshotTable(spark, os.path.join(wroot, "w"), n_buckets=128),
-        changes(spark, 200_000, n_conv=1000, turns_per_conv=50, partitions=32),
-    )
-    shutil.rmtree(wroot, ignore_errors=True)
+    warm_up(spark)
 
     out = {
         "metric": "bootstrap_vs_replay",

@@ -5,43 +5,45 @@ Materializes each prefix of the replay pipeline into a noop sink (full
 column width, no count()-style pruning) so the marginal cost of every
 stage — scan, salted winner agg, join-back, bucket collapse, parquet
 write — is visible.  Diagnostic only; appends nothing to the ledgers.
+
+Usage: PROFILE_EVENTS=4000000 PROFILE_REPS=3 python scripts/profile_replay.py
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+from bench import (  # noqa: E402
+    REWARM_EVENTS,
+    best_of,
+    fresh_tables,
+    host_cpus,
+    maybe_rewarm,
+    scratch_root,
+)
+
 EVENTS = int(os.environ.get("PROFILE_EVENTS", "4000000"))
+REPS = int(os.environ.get("PROFILE_REPS", "3"))
 
 
 def main() -> None:
-    from schema_matching_spark.functions.hostprobe import (
-        first_touch_gbs,
-        prewarm_pages,
-    )
     from schema_matching_spark.operators.salting import winners_join
     from schema_matching_spark.plans.table import SnapshotTable
     from schema_matching_spark.session import get_spark
     from schema_matching_spark.sources.generator import changes
 
-    ft = first_touch_gbs(mib=128, budget_sec=1.0)
-    if ft < 2.0:
-        prewarm_pages(gib=12.0, budget_sec=120.0)
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    scratch = tempfile.mkdtemp(prefix="profrep_", dir=base)
-    out: dict = {"events": EVENTS, "first_touch_gbs": round(ft, 2)}
-    try:
+    maybe_rewarm("session_start")
+    out: dict = {"events": EVENTS,
+                 "first_touch_gbs": REWARM_EVENTS[-1]["first_touch_gbs"]}
+    with scratch_root("profrep_") as scratch:
         spark = get_spark(
-            "profile_replay", master="local[32]", shuffle_partitions=64,
+            "profile_replay", master=f"local[{host_cpus()}]",
+            shuffle_partitions=64,
             extra_conf={"spark.local.dir": os.path.join(scratch, "slocal")},
         )
         spark.sparkContext.setLogLevel("ERROR")
@@ -56,16 +58,10 @@ def main() -> None:
         warm = SnapshotTable(spark, os.path.join(scratch, "warm"), n_buckets=128)
         warm.merge_apply(log, "warm")
 
-        reps = int(os.environ.get("PROFILE_REPS", "3"))
-
-        def timed(tag, thunk):
-            best = []
-            for _ in range(reps):
-                t0 = time.time()
-                thunk()
-                best.append(time.time() - t0)
-            out[tag] = round(min(best), 3)
-            out[tag + "_reps"] = [round(t, 2) for t in best]
+        def timed(tag, thunk, setup=None):
+            best, secs, _ = best_of(REPS, thunk, setup=setup)
+            out[tag] = round(best, 3)
+            out[tag + "_reps"] = [round(t, 2) for t in secs]
             print(f"[{tag}] min {out[tag]:.2f}s {out[tag+'_reps']}",
                   file=sys.stderr, flush=True)
 
@@ -83,18 +79,10 @@ def main() -> None:
         tbl0 = SnapshotTable(spark, os.path.join(scratch, "t0"), n_buckets=128)
         timed("collapse_noop", lambda: noop(tbl0._bucket_collapse(salted())))
 
-        n = [0]
-
-        def full():
-            n[0] += 1
-            tbl = SnapshotTable(
-                spark, os.path.join(scratch, f"t1_{n[0]}"), n_buckets=128
-            )
-            tbl.merge_apply(log, "b0")
-            shutil.rmtree(os.path.join(scratch, f"t1_{n[0]}"),
-                          ignore_errors=True)
-
-        timed("full_replay", full)
+        # a fresh table per rep, made and dropped outside the timing
+        tables, fresh = fresh_tables(spark, scratch, n_buckets=128)
+        timed("full_replay", lambda: tables[-1].merge_apply(log, "b0"),
+              setup=fresh)
 
         # single-shuffle alternative: bucket-partition the raw log once,
         # window does the whole LWW reduce in-bucket (skew-naive).
@@ -105,8 +93,6 @@ def main() -> None:
             lambda: noop(tbl2._bucket_collapse(log.select(*FILE_COLS))),
         )
         spark.stop()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     print(json.dumps(out), flush=True)
 
 

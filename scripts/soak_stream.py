@@ -17,13 +17,13 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
+
+from bench import host_cpus, scratch_root  # noqa: E402
 
 N_SEGMENTS = int(os.environ.get("SOAK_SEGMENTS", "200"))
 EVENTS_PER_SEGMENT = int(os.environ.get("SOAK_EVENTS_PER_SEGMENT", "5000"))
@@ -41,14 +41,12 @@ def main() -> None:
     from schema_matching_spark.sources.wal import write_segments
     from schema_matching_spark.streaming.pipeline import start_cdc_stream
 
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="soak_", dir=base)
-    spark = get_spark(
-        "soak", master="local[16]", shuffle_partitions=16,
-        extra_conf={"spark.local.dir": os.path.join(root, "sl")},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
+    with scratch_root("soak_") as root:
+        spark = get_spark(
+            "soak", master=f"local[{host_cpus()}]", shuffle_partitions=16,
+            extra_conf={"spark.local.dir": os.path.join(root, "sl")},
+        )
+        spark.sparkContext.setLogLevel("ERROR")
         n_events = N_SEGMENTS * EVENTS_PER_SEGMENT
         log = changes(
             spark, n_events, n_conv=2000, turns_per_conv=30, partitions=16
@@ -119,8 +117,6 @@ def main() -> None:
             "applied_ledger_len": len(m["applied_batches"]),
         }
         print(json.dumps(out))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":

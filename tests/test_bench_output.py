@@ -8,9 +8,17 @@ BENCH/ file, compact headline as the last stdout line — and the compact
 line must stay under ``COMPACT_MAX_CHARS`` even for a worst-case-sized
 capture, so growth can never silently re-truncate it."""
 
+import importlib.util
 import json
+import os
+import subprocess
+import sys
+
+import pytest
 
 import bench
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _padded_out() -> dict:
@@ -130,3 +138,31 @@ def test_compact_headline_handles_minimal_capture():
     d = json.loads(bench.compact_headline(out, None))
     assert d["cdc_replay"]["events_per_sec"] is None
     assert len(json.dumps(d)) <= bench.COMPACT_MAX_CHARS
+
+
+@pytest.mark.parametrize(
+    "script, has_flags",
+    [
+        ("bench_bootstrap", True),
+        ("bench_sustained", True),
+        # no flags: running these would start a full leg
+        ("profile_replay", False),
+        ("soak_stream", False),
+    ],
+)
+def test_bench_script_entry_points_load(script, has_flags):
+    """Every bench leg script imports bench's helpers at module top, so a
+    renamed helper or a broken flag fails here, not hours into a leg.
+    Starts no Spark: module import plus ``--help`` only."""
+    path = os.path.join(REPO, "scripts", f"{script}.py")
+    spec = importlib.util.spec_from_file_location(f"_bench_leg_{script}", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    assert callable(module.main)
+    if has_flags:
+        proc = subprocess.run(
+            [sys.executable, path, "--help"],
+            capture_output=True, text=True, timeout=60,
+        )
+        assert proc.returncode == 0, proc.stderr
+        assert "usage:" in proc.stdout
