@@ -20,13 +20,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full CDC replay (generate → dedup → salted collapse →
-    exactly-once merge into a snapshot table) at sf0.001-ish scale, plus
-    the TPC-H-style pricing summary over sf0.001 lineitem as the
-    returned DataFrame (stable schema, >0 rows)."""
-    from schema_matching_spark.queries.relational import q_pricing_summary
+    """Flagship: the CDC replay at sf0.001 (change log from the events
+    table → duplicate delivery → LWW collapse → exactly-once merge into
+    a snapshot table); returns the per-role aggregate of the final
+    state (stable schema, >0 rows)."""
+    from schema_matching_spark.queries.cdc import q_cdc_replay_state
 
-    return q_pricing_summary(spark, "/root/testdata/sf0.001")
+    return q_cdc_replay_state(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -119,23 +119,6 @@ def token_ngrams(text: Column | str, n: int = 3) -> Column:
 # ------------------------------------------------------------------- minhash
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 32) -> Column:
-    """MinHash signature as a single Column expression: for seed i, min
-    over shingles of xxhash64(shingle, i).
-
-    NOTE — interpreted path: higher-order ``transform`` lambdas are NOT
-    whole-stage-codegen'd, so this evaluates per element in the
-    interpreter.  Fine for small inputs / composability; the hot path
-    is :func:`minhash_signatures` (explode + codegen'd hash agg),
-    measured ~20× faster at corpus scale."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i))))
-            for i in range(n_hashes)
-        ]
-    )
-
-
 def minhash_signatures(
     df: DataFrame, id_col: str, shingles_col: str, n_hashes: int = 32
 ) -> DataFrame:

@@ -108,16 +108,3 @@ def read_iceberg_state(
     SnapshotTable.read()."""
     return spark.table(f"{catalog}.{table_ident}").where(F.col("op") != "D")
 
-
-def expire_iceberg_tombstones(
-    spark: SparkSession,
-    table_ident: str,
-    horizon_lsn: int,
-    catalog: str = "iceberg",
-) -> None:
-    """Maintenance analogue of SnapshotTable.compact(horizon): physically
-    drop tombstones older than the redelivery horizon."""
-    spark.sql(
-        f"DELETE FROM {catalog}.{table_ident} "
-        f"WHERE op = 'D' AND lsn < {int(horizon_lsn)}"
-    )

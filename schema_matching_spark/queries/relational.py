@@ -1,14 +1,14 @@
-"""Driver-facing oracle query pack — relational surface (SURVEY.md §2.C).
+"""TPC-H-style queries: the four ``bench.HEADLINE`` times, plus a few
+relational-operator checks.
 
-Each entry is a (spark, sf_dir) -> DataFrame callable plus a matching
-DuckDB oracle SQL string in ORACLE.  Column names are aliased
-identically on both sides (the driver's compare sorts columns by name
-before hashing values).
-
-Plan hygiene (SURVEY.md §4.2): filters live next to scans so Catalyst
-pushes them into the parquet reader; small dimensions are broadcast;
-aggregates are expressed with built-in functions only (whole-stage
-codegen, no Python in the hot path).
+bench.py times ``pricing_summary``, ``top_unshipped``,
+``local_supplier_volume`` and ``window_top_orders`` next to the CDC
+legs.  The other seven pin the operators the CDC engine is built from
+(rollup, distinct / HLL aggregation, running window frames, semi/anti
+and full outer joins, set difference) against DuckDB.  Every query
+with an oracle uses identically aliased columns (the driver's compare
+sorts columns by name before hashing values).  None of them touch the
+CDC engine; the engine's own plans are pinned in tests/test_plans.py.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # --------------------------------------------------------------- aggregation
 
 def q_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 style: the flagship aggregation (SURVEY.md §7.5)."""
+    """TPC-H Q1 style: filtered scan + grouped aggregation."""
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
@@ -201,6 +201,21 @@ ORDER BY o_orderstatus
 """
 
 
+def q_approx_distinct(spark, sf_dir):
+    """approx_count_distinct (HLL) next to the exact count — the approx
+    value is engine-specific, so rows-only; the test checks relative
+    error < 5% against the exact column."""
+    li = _t(spark, sf_dir, "lineitem")
+    return (
+        li.groupBy("l_returnflag")
+        .agg(
+            F.countDistinct("l_orderkey").alias("exact_orders"),
+            F.approx_count_distinct("l_orderkey", 0.02).alias("approx_orders"),
+        )
+        .orderBy("l_returnflag")
+    )
+
+
 # ------------------------------------------------------------------- windows
 
 def q_window_top_orders(spark, sf_dir):
@@ -234,7 +249,6 @@ SELECT * FROM (
 ) WHERE rn <= 2
 ORDER BY o_custkey, rn
 """
-
 
 def q_running_revenue(spark, sf_dir):
     """Running-frame window: cumulative revenue by ship month."""
@@ -290,35 +304,6 @@ UNION ALL
 SELECT c_custkey, 'no_orders' AS segment FROM customer
 WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
 ORDER BY c_custkey
-"""
-
-
-def q_theta_join(spark, sf_dir):
-    """Non-equi range join: lineitems shipped within 90 days of order date."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") < 100)
-    li = _t(spark, sf_dir, "lineitem")
-    joined = li.join(
-        F.broadcast(o),
-        (li.l_orderkey == o.o_orderkey)
-        & (li.l_shipdate >= o.o_orderdate)
-        & (li.l_shipdate <= F.date_add(o.o_orderdate, 90)),
-    )
-    return (
-        joined.groupBy("o_orderkey")
-        .agg(F.count("*").alias("n_fast_items"))
-        .orderBy("o_orderkey")
-    )
-
-
-SQL_THETA = """
-SELECT o_orderkey, count(*) AS n_fast_items
-FROM lineitem JOIN orders
-  ON l_orderkey = o_orderkey
- AND l_shipdate >= o_orderdate
- AND l_shipdate <= o_orderdate + INTERVAL 90 DAY
-WHERE o_orderkey < 100
-GROUP BY o_orderkey
-ORDER BY o_orderkey
 """
 
 
@@ -378,167 +363,32 @@ ORDER BY side, nationkey
 """
 
 
-# ------------------------------------------------------------- scalar fns
-
-def q_string_functions(spark, sf_dir):
-    p = _t(spark, sf_dir, "part")
-    return (
-        p.where(F.col("p_partkey") <= 50)
-        .select(
-            "p_partkey",
-            F.upper("p_brand").alias("brand_upper"),
-            F.length("p_name").alias("name_len"),
-            F.substring("p_type", 1, 5).alias("type_prefix"),
-            F.concat_ws("/", "p_brand", "p_type").alias("brand_type"),
-            F.regexp_replace("p_name", "[aeiou]", "").alias("name_novowel"),
-            F.trim(F.lower("p_name")).alias("name_lower"),
-        )
-        .orderBy("p_partkey")
-    )
-
-
-SQL_STRING_FNS = """
-SELECT p_partkey,
-       upper(p_brand) AS brand_upper,
-       length(p_name) AS name_len,
-       substring(p_type, 1, 5) AS type_prefix,
-       concat_ws('/', p_brand, p_type) AS brand_type,
-       regexp_replace(p_name, '[aeiou]', '', 'g') AS name_novowel,
-       trim(lower(p_name)) AS name_lower
-FROM part
-WHERE p_partkey <= 50
-ORDER BY p_partkey
-"""
-
-
-def q_date_functions(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.groupBy(
-            F.year("o_orderdate").alias("order_year"),
-            F.quarter("o_orderdate").alias("order_quarter"),
-        )
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.min(F.dayofmonth("o_orderdate")).alias("min_dom"),
-        )
-        .orderBy("order_year", "order_quarter")
-    )
-
-
-SQL_DATE_FNS = """
-SELECT year(o_orderdate) AS order_year,
-       quarter(o_orderdate) AS order_quarter,
-       count(*) AS n_orders,
-       min(dayofmonth(o_orderdate)) AS min_dom
-FROM orders
-GROUP BY 1, 2
-ORDER BY order_year, order_quarter
-"""
-
-
-def q_case_and_predicates(spark, sf_dir):
-    """CASE/IN/BETWEEN/LIKE/IS NULL surface."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.where(
-            F.col("l_quantity").between(10, 40)
-            & F.col("l_returnflag").isin("A", "R")
-            & F.col("l_linestatus").like("F%")
-        )
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            F.when(F.col("l_discount") > 0.05, F.lit("high"))
-            .when(F.col("l_discount") > 0.02, F.lit("mid"))
-            .otherwise(F.lit("low"))
-            .alias("disc_band"),
-        )
-        .groupBy("disc_band")
-        .agg(F.count("*").alias("n"))
-        .orderBy("disc_band")
-    )
-
-
-SQL_CASE_PRED = """
-SELECT CASE WHEN l_discount > 0.05 THEN 'high'
-            WHEN l_discount > 0.02 THEN 'mid'
-            ELSE 'low' END AS disc_band,
-       count(*) AS n
-FROM lineitem
-WHERE l_quantity BETWEEN 10 AND 40
-  AND l_returnflag IN ('A', 'R')
-  AND l_linestatus LIKE 'F%'
-GROUP BY 1
-ORDER BY disc_band
-"""
-
-
-# ----------------------------------------------------------------- json
-
-def q_json_events(spark, sf_dir):
-    """JSON extraction from events.props."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("int").alias("k"),
-        )
-        .where(F.col("k").isNotNull())
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.max("k").alias("max_k"),
-        )
-        .orderBy("event_type")
-    )
-
-
-SQL_JSON_EVENTS = """
-SELECT event_type, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k, max(k) AS max_k FROM (
-  SELECT event_type, CAST(json_extract_string(props, '$.k') AS INT) AS k
-  FROM events
-) WHERE k IS NOT NULL
-GROUP BY event_type
-ORDER BY event_type
-"""
-
-
 # ----------------------------------------------------------- registry
 
 QUERIES = {
     "pricing_summary": q_pricing_summary,
     "top_unshipped": q_top_unshipped,
     "local_supplier_volume": q_local_supplier_volume,
+    "window_top_orders": q_window_top_orders,
     "rollup_orders": q_rollup_orders,
     "distinct_agg": q_distinct_agg,
-    "window_top_orders": q_window_top_orders,
+    "approx_distinct": q_approx_distinct,
     "running_revenue": q_running_revenue,
     "semi_anti_join": q_semi_anti_join,
-    "theta_join": q_theta_join,
     "full_outer": q_full_outer,
     "set_ops": q_set_ops,
-    "string_functions": q_string_functions,
-    "date_functions": q_date_functions,
-    "case_and_predicates": q_case_and_predicates,
-    "json_events": q_json_events,
 }
 
 ORACLE = {
     "pricing_summary": SQL_PRICING,
     "top_unshipped": SQL_TOP_UNSHIPPED,
     "local_supplier_volume": SQL_LOCAL_SUPPLIER,
+    "window_top_orders": SQL_WINDOW_TOP,
     "rollup_orders": SQL_ROLLUP,
     "distinct_agg": SQL_DISTINCT_AGG,
-    "window_top_orders": SQL_WINDOW_TOP,
+    # approx_distinct: HLL sketch values are engine-specific — rows-only
     "running_revenue": SQL_RUNNING_REVENUE,
     "semi_anti_join": SQL_SEMI_ANTI,
-    "theta_join": SQL_THETA,
     "full_outer": SQL_FULL_OUTER,
     "set_ops": SQL_SET_OPS,
-    "string_functions": SQL_STRING_FNS,
-    "date_functions": SQL_DATE_FNS,
-    "case_and_predicates": SQL_CASE_PRED,
-    "json_events": SQL_JSON_EVENTS,
 }

@@ -1,7 +1,8 @@
 """Source/sink surface as oracle-checkable queries (SURVEY.md §2.C
-"Scans / sources"): CSV and JSON batch round-trips, partitioned-parquet
-write + partition-pruned read, and a genuine Structured Streaming
-execution whose result the batch oracle verifies.
+"Scans / sources"): CSV and JSON batch round-trips, a VARIANT scan of
+JSON event properties, partitioned-parquet write + partition-pruned
+read, and a genuine Structured Streaming execution whose result the
+batch oracle verifies.
 
 Round-trip queries materialize testdata into a deterministic scratch
 dir (overwritten each run) and read it back through the format under
@@ -374,10 +375,52 @@ ORDER BY lsn
 """
 
 
+def q_variant_extract(spark, sf_dir):
+    """Spark 4 VARIANT type over semi-structured JSON: parse_json →
+    binary variant → typed path extraction (variant_get) + missing-path
+    safety (try_variant_get).  VARIANT is the engine-native way to scan
+    heterogeneous JSON at scale — the shredded binary encoding avoids
+    re-parsing the JSON text per field access (one parse, N typed
+    gets), unlike get_json_object chains."""
+    from pyspark.sql import functions as F
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ex = ev.select(
+        "event_type", F.parse_json("props").alias("v")
+    ).select(
+        "event_type",
+        F.variant_get("v", "$.k", "bigint").alias("k"),
+        F.try_variant_get("v", "$.absent", "bigint").alias("absent"),
+    )
+    return (
+        ex.groupBy("event_type")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum("k").alias("sum_k"),
+            F.max("k").alias("max_k"),
+            F.sum(F.col("absent").isNull().cast("long")).alias("n_absent"),
+        )
+        .orderBy("event_type")
+    )
+
+
+SQL_VARIANT_EXTRACT = """
+SELECT event_type,
+       count(*) AS n,
+       CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+       CAST(max(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k,
+       count(*) AS n_absent
+FROM events
+GROUP BY event_type
+ORDER BY event_type
+"""
+
+
 QUERIES = {
     "csv_source": q_csv_source,
     "json_source": q_json_source,
     "debezium_parse": q_debezium_parse,
+    "variant_extract": q_variant_extract,
     "partition_pruned_scan": q_partition_pruned_scan,
     "stream_aggregate": q_stream_aggregate,
     "stream_stream_join": q_stream_stream_join,
@@ -396,6 +439,7 @@ ORACLE = {
     "csv_source": SQL_CSV_SOURCE,
     "json_source": SQL_JSON_SOURCE,
     "debezium_parse": SQL_DEBEZIUM_PARSE,
+    "variant_extract": SQL_VARIANT_EXTRACT,
     "partition_pruned_scan": SQL_PARTITION_PRUNED,
     "stream_aggregate": SQL_STREAM_AGGREGATE,
     "stream_stream_join": SQL_STREAM_STREAM_JOIN,

@@ -140,6 +140,23 @@ def test_compact_headline_handles_minimal_capture():
     assert len(json.dumps(d)) <= bench.COMPACT_MAX_CHARS
 
 
+def test_headline_queries_are_registered_with_evidence():
+    """bench.py looks the HEADLINE names up only after every CDC leg has
+    run, so a name missing from the registry would surface as a KeyError
+    at the very end of a full run.  Each one also keeps its correctness
+    evidence: an oracle, or (minhash_lsh_dedup) a rows-only allowlist
+    row naming its local value test.  Starts no Spark."""
+    import __spark_entry__ as E
+    from tests.test_registry_evidence import ROWS_ONLY_WITH_LOCAL_TEST
+
+    queries, oracles = E.queries(), E.oracle_sql()
+    assert [n for n in bench.HEADLINE if n not in queries] == []
+    assert [
+        n for n in bench.HEADLINE
+        if n not in oracles and n not in ROWS_ONLY_WITH_LOCAL_TEST
+    ] == []
+
+
 @pytest.mark.parametrize(
     "script, has_flags",
     [

@@ -1,11 +1,12 @@
 """Physical-plan hygiene golden tests (SURVEY.md §4.2).
 
 The engine's scale posture relies on Catalyst doing specific things —
-filter pushdown into the parquet scan, column pruning, broadcast of
-small dimensions, whole-stage codegen, and no Python evaluation inside
-JVM-only pipelines.  These tests pin those properties so a regression
-(e.g. an accidental UDF or a cast blocking pushdown) is caught at test
-time, not at 100 TB.
+filter pushdown into the snapshot table's parquet scans (``lookup``,
+``scan``), column pruning of projected reads, broadcast of small key
+sets (``read_keys``), whole-stage codegen of the collapse aggregate,
+and no Python evaluation inside JVM-only pipelines.  These tests pin
+those properties so a regression (e.g. an accidental UDF or a cast
+blocking pushdown) is caught at test time, not at 100 TB.
 """
 
 import os
@@ -26,42 +27,65 @@ def _plan(df, mode: str = "formatted") -> str:
     return jqe.toString()
 
 
-def test_filter_pushdown_reaches_parquet_scan(spark):
-    from schema_matching_spark.queries.relational import q_pricing_summary
+def _table(spark, root, mode="cow"):
+    """An 8-bucket snapshot table holding one small applied batch."""
+    from schema_matching_spark.operators.apply import apply_batch
+    from schema_matching_spark.plans.table import SnapshotTable
+    from schema_matching_spark.sources.generator import changes
 
-    plan = _plan(q_pricing_summary(spark, SF_DIR))
-    assert "PushedFilters:" in plan
-    # the shipdate predicate must be inside the scan, not a post-filter only
-    assert "LessThanOrEqual(l_shipdate" in plan
-
-
-def test_column_pruning_in_scan(spark):
-    from schema_matching_spark.queries.relational import q_pricing_summary
-
-    plan = _plan(q_pricing_summary(spark, SF_DIR))
-    # pricing summary touches 7 of lineitem's 11 columns; the scan must
-    # not read the join keys it doesn't need
-    assert "l_partkey" not in plan
-    assert "l_suppkey" not in plan
-    assert "ReadSchema" in plan
+    table = SnapshotTable(spark, root, n_buckets=8, mode=mode)
+    apply_batch(table, changes(spark, 2000, n_conv=20, turns_per_conv=10), "b0")
+    return table
 
 
-def test_small_dims_are_broadcast(spark):
-    from schema_matching_spark.queries.relational import q_local_supplier_volume
+def _final_plan(df) -> str:
+    df.collect()  # AQE settles the physical plan only once executed
+    return _plan(df)
 
-    plan = _plan(q_local_supplier_volume(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
+
+def test_filter_pushdown_reaches_parquet_scan(spark, tmp_path):
+    """lookup's key predicate and a COW scan's ts window must be inside
+    the parquet scan, not post-filters only (on MOR the ts residual sits
+    after the LWW reduce, so only the key predicate can push there)."""
+    for mode in ("cow", "mor"):
+        table = _table(spark, str(tmp_path / mode), mode)
+        plan = _final_plan(table.lookup("conv-00000001"))
+        assert "EqualTo(conv_id,conv-00000001)" in plan, (mode, plan[:3000])
+    table = _table(spark, str(tmp_path / "cow_scan"))
+    lo = table.read().agg(F.max("ts")).first()[0]
+    plan = _final_plan(table.scan(ts_min=lo))
+    assert "GreaterThanOrEqual(ts," in plan, plan[:3000]
+
+
+def test_column_pruning_in_scan(spark, tmp_path):
+    """A COW read projected to the key reads only the key columns plus
+    ``op`` (the tombstone filter) — never the payload."""
+    table = _table(spark, str(tmp_path / "t"))
+    plan = _final_plan(table.read().select("conv_id", "turn_idx"))
+    schemas = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+    assert schemas, plan[:3000]
+    for ln in schemas:
+        assert "text" not in ln and "role" not in ln, ln
+
+
+def test_small_dims_are_broadcast(spark, tmp_path):
+    """read_keys' semi join against a batch-small key set is broadcast
+    (no shuffle of the table's rows)."""
+    table = _table(spark, str(tmp_path / "t"))
+    keys = spark.createDataFrame([("conv-00000001",)], "conv_id string")
+    plan = _final_plan(table.read_keys(keys))
+    assert "BroadcastHashJoin LeftSemi" in plan, plan[:3000]
 
 
 def test_whole_stage_codegen_covers_agg(spark):
-    from schema_matching_spark.queries.relational import q_pricing_summary
+    """The salted winners aggregate of the collapse runs in whole-stage
+    codegen (formatted mode marks codegen'd operators with a '*')."""
+    from schema_matching_spark.operators.salting import winners_join
+    from schema_matching_spark.sources.generator import changes
 
-    df = q_pricing_summary(spark, SF_DIR)
-    df.collect()  # AQE only shows codegen spans in the final (executed) plan
-    plan = _plan(df)
-    # formatted mode marks whole-stage-codegen operators with a '*'
-    assert "* HashAggregate" in plan
-    assert "* ColumnarToRow" in plan or "* Project" in plan or "* Filter" in plan
+    log = changes(spark, 10_000, n_conv=50, turns_per_conv=20, partitions=4)
+    plan = _final_plan(winners_join(log, n_salts=4))
+    assert "* HashAggregate" in plan, plan[:3000]
 
 
 def test_cdc_collapse_plan_is_jvm_only(spark, tmp_path):

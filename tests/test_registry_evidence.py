@@ -81,7 +81,7 @@ def test_every_query_has_evidence():
 
 
 def test_approx_distinct_tolerance(spark):
-    from schema_matching_spark.queries.relational2 import q_approx_distinct
+    from schema_matching_spark.queries.relational import q_approx_distinct
 
     rows = q_approx_distinct(spark, _TOLERANCE_SF_DIR).collect()
     assert rows, "approx_distinct returned no groups"
