@@ -19,10 +19,13 @@ Layout (SURVEY.md §7.1):
   schemas.py            transcript / change-event StructTypes
   sources/generator.py  deterministic change-log generator (B10)
   sources/wal.py        file-based WAL segment reader/writer (B1)
+  sources/table_changes.py  `table_changes` stream of snapshot-version
+                        spans (the table's change-feed offsets)
   operators/            dedup (B2), salting (B3), collapse (B4),
                         merge planning (B5), evolve (B7), verify (B9)
   plans/table.py        Iceberg-model snapshot table w/ atomic commits
-  streaming/pipeline.py Structured Streaming tail + foreachBatch (B6/B8)
+  streaming/pipeline.py Structured Streaming tail + foreachBatch (B6/B8),
+                        start_change_feed (changes_between per span)
   functions/            collector feature extraction (A3-A12),
                         assignment solver (A14)
   queries/              the driver-facing oracle query pack (§2.C)

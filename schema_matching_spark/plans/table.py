@@ -70,6 +70,29 @@ FILE_SCHEMA = StructType(
 FILE_COLS = [*TRANSCRIPT_COLS, "lsn", "op"]
 
 
+def _pointer_file(root: str, ref: str) -> str:
+    if ref == "main":
+        return os.path.join(root, "_current.json")
+    return os.path.join(root, "refs", f"{ref}.json")
+
+
+def _read_pointer(path: str) -> int:
+    """The version a ``{"version": N}`` pointer file names; 0 (nothing
+    committed) when it does not exist."""
+    try:
+        with open(path) as f:
+            return json.load(f)["version"]
+    except FileNotFoundError:
+        return 0
+
+
+def ref_version(root: str, ref: str = "main") -> int:
+    """Head version of ``ref`` in the table at ``root``, without opening
+    a :class:`SnapshotTable` handle (the ``table_changes`` stream's
+    latest offset reads it on every trigger)."""
+    return _read_pointer(_pointer_file(root, ref))
+
+
 def bucket_expr(n_buckets: int):
     """Deterministic bucket id for a conv_id (xxhash64, never Python hash)."""
     return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
@@ -376,10 +399,7 @@ class SnapshotTable:
     # ---------------------------------------------------------------- io
 
     def _pointer_path(self, ref: str | None = None) -> str:
-        ref = self.ref if ref is None else ref
-        if ref == "main":
-            return os.path.join(self.root, "_current.json")
-        return os.path.join(self.root, "refs", f"{ref}.json")
+        return _pointer_file(self.root, self.ref if ref is None else ref)
 
     def _tag_path(self, name: str) -> str:
         return os.path.join(self.root, "tags", f"{name}.json")
@@ -389,11 +409,7 @@ class SnapshotTable:
 
     def current_version(self) -> int:
         """0 = empty table (no snapshot committed yet)."""
-        try:
-            with open(self._pointer_path()) as f:
-                return json.load(f)["version"]
-        except FileNotFoundError:
-            return 0
+        return ref_version(self.root, self.ref)
 
     def _next_version(self) -> int:
         """Next manifest number: one past the highest REF HEAD (main +
@@ -407,15 +423,21 @@ class SnapshotTable:
         (tests/test_replay.py crash #2).  Single-driver allocation; a
         multi-writer deployment swaps this for the catalog's CAS, as in
         real Iceberg."""
-        heads = [self._read_ref_version("main")]
-        for d in ("refs", "tags"):
+        heads = [v for _name, _kind, v in self._ref_heads()]
+        return max([self._read_ref_version("main"), *heads]) + 1
+
+    def _ref_heads(self) -> list[tuple[str, str, int]]:
+        """``(name, kind, version)`` of every branch (``refs/``) and tag
+        (``tags/``) pointer — main excluded — sorted by name per kind."""
+        heads = []
+        for kind, d in (("branch", "refs"), ("tag", "tags")):
             ref_dir = os.path.join(self.root, d)
             if os.path.isdir(ref_dir):
-                for fn in os.listdir(ref_dir):
+                for fn in sorted(os.listdir(ref_dir)):
                     if fn.endswith(".json"):
-                        with open(os.path.join(ref_dir, fn)) as f:
-                            heads.append(json.load(f)["version"])
-        return max(heads) + 1
+                        path = os.path.join(ref_dir, fn)
+                        heads.append((fn[:-5], kind, _read_pointer(path)))
+        return heads
 
     def manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
@@ -770,23 +792,12 @@ class SnapshotTable:
     def refs(self) -> DataFrame:
         """All named pointers (main + branches + tags) as a relation."""
         rows = [("main", "branch", self._read_ref_version("main"))]
-        for kind, d in (("branch", "refs"), ("tag", "tags")):
-            ref_dir = os.path.join(self.root, d)
-            if os.path.isdir(ref_dir):
-                for fn in sorted(os.listdir(ref_dir)):
-                    if fn.endswith(".json"):
-                        with open(os.path.join(ref_dir, fn)) as f:
-                            rows.append((fn[:-5], kind, json.load(f)["version"]))
         return self.spark.createDataFrame(
-            rows, "name string, kind string, version int"
+            rows + self._ref_heads(), "name string, kind string, version int"
         )
 
     def _read_ref_version(self, ref: str) -> int:
-        try:
-            with open(self._pointer_path(ref)) as f:
-                return json.load(f)["version"]
-        except FileNotFoundError:
-            return 0
+        return ref_version(self.root, ref)
 
     def _is_ancestor(self, anc: int, desc: int) -> bool:
         """True iff snapshot ``anc`` is on ``desc``'s parent chain.
@@ -1403,14 +1414,7 @@ class SnapshotTable:
         # a staged-but-unpublished branch must keep its data, and a
         # tagged training-run snapshot must stay time-travelable.
         # Dropping the branch/tag un-pins it for the next expiry run.
-        pinned = {current}
-        for kind_dir in ("refs", "tags"):
-            d = os.path.join(self.root, kind_dir)
-            if os.path.isdir(d):
-                for fn in os.listdir(d):
-                    if fn.endswith(".json"):
-                        with open(os.path.join(d, fn)) as f:
-                            pinned.add(json.load(f)["version"])
+        pinned = {current, *(v for _name, _kind, v in self._ref_heads())}
         # "newest keep_n" means along THIS ref's ancestry, not the global
         # manifest sequence — otherwise a dropped branch's head (often
         # the numerically newest manifest) would be retained forever.

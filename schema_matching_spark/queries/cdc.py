@@ -298,15 +298,13 @@ GROUP BY role ORDER BY role
 """
 
 
-def q_cdc_changelog(spark, sf_dir):
-    """Incremental/changelog read (plans/table.py changes_between —
-    Iceberg changelog-scan parity): build a snapshot table from the
-    first half of the events-derived log, merge the second half, then
-    read the net change feed between the two snapshots and aggregate
-    it.  Exact-oracled since r5 (SQL_CDC_CHANGELOG — the LWW-diff
-    classification from tests/test_changelog.py's mirror, over the same
-    parquet); COW/MOR/multi-commit-span value evidence stays in
-    tests/test_changelog.py."""
+def changelog_summary(spark, sf_dir, read_feed):
+    """Build a snapshot table from the first half of the events-derived
+    log, merge the second half, then aggregate per ``change_type`` the
+    feed ``read_feed(table, v1, scratch_dir)`` returns for the span
+    after the first commit.  ``cdc_changelog`` and
+    ``table_changes_source`` differ only in how they read that feed, so
+    they share this body and the SQL_CDC_CHANGELOG oracle."""
     import os
     import shutil
 
@@ -322,7 +320,7 @@ def q_cdc_changelog(spark, sf_dir):
         v1 = table.current_version()
         apply_batch(table, log.where(F.col("lsn") >= cut), "b2")
         rows = (
-            table.changes_between(v1)
+            read_feed(table, v1, root)
             .groupBy("change_type")
             .agg(
                 F.count("*").alias("n_changes"),
@@ -339,6 +337,19 @@ def q_cdc_changelog(spark, sf_dir):
         [tuple(r) for r in rows],
         "change_type string, n_changes long, n_convs long,"
         " min_lsn long, max_lsn long",
+    )
+
+
+def q_cdc_changelog(spark, sf_dir):
+    """Incremental/changelog read (plans/table.py changes_between —
+    Iceberg changelog-scan parity): the net change feed between the two
+    snapshots of :func:`changelog_summary`'s table, aggregated.
+    Exact-oracled since r5 (SQL_CDC_CHANGELOG — the LWW-diff
+    classification from tests/test_changelog.py's mirror, over the same
+    parquet); COW/MOR/multi-commit-span value evidence stays in
+    tests/test_changelog.py."""
+    return changelog_summary(
+        spark, sf_dir, lambda table, v1, _scratch: table.changes_between(v1)
     )
 
 
@@ -615,9 +626,9 @@ def q_dedup_index_sync(spark, sf_dir):
     The hop here is driven from the batch change feed
     (changes_between → signature_events → merge_apply), i.e. exactly
     the per-micro-batch body of start_dedup_index_stream; the streaming
-    transport around it is pinned by tests/test_dedup_index.py
-    (sync/update/delete/checkpoint-resume) and the Python-DataSource
-    stream by the table_changes_source query.  Rows-only (xxhash64
+    transport around it (start_change_feed) is pinned by
+    tests/test_dedup_index.py (sync/update/delete/checkpoint-resume)
+    and by the table_changes_source query.  Rows-only (xxhash64
     signatures, engine-internal tables)."""
     import os
 

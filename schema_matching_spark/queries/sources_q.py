@@ -262,58 +262,33 @@ JOIN (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase') p
 
 
 def q_table_changes_source(spark, sf_dir):
-    """CDC-out connector (sources/table_changes.py — the snapshot table
-    as a `table_changes` readable format): build a table from the first
-    half of the events-derived log, merge the second half, then read
-    the change feed between the snapshots THROUGH the registered Python
-    DataSource and aggregate it.  Exact-oracled since r5: the connector
-    must reproduce changes_between bit-for-bit, so it shares
-    queries/cdc.SQL_CDC_CHANGELOG (the LWW-diff classification over the
-    same parquet).  Full parity with changes_between plus checkpointed
-    streaming resume is pinned in tests/test_table_changes_source.py."""
-    import shutil
+    """CDC-out stream (streaming/pipeline.start_change_feed over the
+    `table_changes` span source): :func:`queries.cdc.changelog_summary`'s
+    table, with the feed after its first commit DRAINED through a
+    checkpointed availableNow stream started at that version — each
+    micro-batch's ``changes_between`` appended to parquet — instead of
+    read in batch.  The stream computes no feed of its own, so it must
+    reproduce ``cdc_changelog`` exactly and shares its oracle
+    (queries/cdc.SQL_CDC_CHANGELOG).  Full-row parity with
+    changes_between, redelivery jitter included, plus checkpointed
+    resume are pinned in tests/test_table_changes_source.py."""
+    from ..streaming.pipeline import drain_catchup, start_change_feed
+    from .cdc import changelog_summary
 
-    from ..operators.apply import apply_batch
-    from ..plans.table import SnapshotTable
-    from ..sources.table_changes import TableChangesDataSource
-    from .cdc import _events_changelog
-
-    try:
-        spark.dataSource.register(TableChangesDataSource)
-    except Exception:
-        pass  # already registered in this session
-    log = _events_changelog(spark, sf_dir)
-    cut = log.count() // 2
-    root = tempfile.mkdtemp(prefix="q_tcsrc_")
-    try:
-        table = SnapshotTable(spark, os.path.join(root, "t"), n_buckets=8)
-        apply_batch(table, log.where(F.col("lsn") < cut), "b1")
-        v1 = table.current_version()
-        apply_batch(table, log.where(F.col("lsn") >= cut), "b2")
-        feed = (
-            spark.read.format("table_changes")
-            .option("path", table.root)
-            .option("from_version", v1)
-            .load()
-        )
-        rows = (
-            feed.groupBy("change_type")
-            .agg(
-                F.count("*").alias("n_changes"),
-                F.countDistinct("conv_id").alias("n_convs"),
-                F.min("lsn").alias("min_lsn"),
-                F.max("lsn").alias("max_lsn"),
+    def streamed(table, v1, scratch):
+        out = os.path.join(scratch, "feed")
+        drain_catchup(
+            lambda: start_change_feed(
+                spark,
+                table.root,
+                lambda feed, _bid: feed.write.mode("append").parquet(out),
+                os.path.join(scratch, "ckpt"),
+                start_version=v1,
             )
-            .orderBy("change_type")
-            .collect()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        [tuple(r) for r in rows],
-        "change_type string, n_changes long, n_convs long,"
-        " min_lsn long, max_lsn long",
-    )
+        return spark.read.parquet(out)
+
+    return changelog_summary(spark, sf_dir, streamed)
 
 
 def q_debezium_parse(spark, sf_dir):

@@ -1,269 +1,59 @@
-"""CDC-out connector: the snapshot table itself as a readable format
-(`table_changes`) — batch AND micro-batch streaming — so a downstream
-pipeline can tail the LAKE TABLE's net changes the way this engine
-tails the upstream WAL.  This is the Delta/Iceberg "table as a
-streaming source of its own change feed" shape, built on PySpark 4's
-Python DataSource API (same offset contract as sources/pysource.py).
+"""CDC-out connector: the snapshot table's change feed as a micro-batch
+stream (`table_changes`), so a downstream pipeline can tail the LAKE
+TABLE's net changes the way this engine tails the upstream WAL — the
+Delta/Iceberg "table as a streaming source of its own change feed"
+shape, on PySpark 4's Python DataSource API.
 
-    spark.dataSource.register(TableChangesDataSource)
-    # batch: the feed between two snapshots
-    df = (spark.read.format("table_changes")
-          .option("path", table_root).option("from_version", 3).load())
-    # streaming: one micro-batch per new snapshot span
+The stream carries SPANS, not rows: offsets are snapshot versions
+(``{"version": n}``, the pointer read once per trigger) and each
+micro-batch is one ``(v_from, v_to)`` row naming the snapshots
+committed since the last one.  The consumer turns the span into the
+feed with ``SnapshotTable.changes_between(v_from, v_to)`` —
+``streaming/pipeline.start_change_feed`` is that consumer — so the
+stream, batch readers and every downstream hop share the one changelog
+implementation (same LWW winner, same payload under redelivery).
+
     st = (spark.readStream.format("table_changes")
-          .option("path", table_root).load())
+          .option("path", table_root).load())   # v_from long, v_to long
 
-Semantics match ``SnapshotTable.changes_between`` (plans/table.py): a
-micro-batch covers the manifest versions (start, end]; only files added
-in that span are read; candidates LWW-reduce per key; a narrow
-from-state classifies each as insert/update/delete and drops carried /
-stale / dead-tombstone rows.
-
-Distribution: offsets are snapshot VERSIONS (driver reads two small
-JSON manifests per trigger); each InputPartition owns one hash
-BUCKET's file diff and computes its slice of the feed executor-side
-with pyarrow/pandas — bucket-parallel, no driver data movement, the
-same per-bucket independence every other table op relies on.  The
-source is replayable from any retained snapshot (``commit`` is a
+The source is replayable from any retained snapshot (``commit`` is a
 no-op); ``expire_snapshots`` bounds the replay window exactly as it
 bounds time travel.
-
-Tie-break note: duplicate (key, lsn) rows (payload-jittered
-redelivery beyond the dedup watermark) resolve by a deterministic
-payload hash, like the JVM path — but with a Python-side hash, so on
-such degenerate inputs the SURVIVING PAYLOAD may differ from
-``changes_between`` while the change_type/lsn feed is identical.
-Tests pin full parity on unique-lsn logs and determinism everywhere.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from ..plans.table import ref_version
 
-SCHEMA = (
-    "change_type string, conv_id string, turn_idx int, role string, "
-    "text string, tool string, ts timestamp, lsn long"
-)
-_FROM_COLS = ["conv_id", "turn_idx", "lsn", "op"]
+SCHEMA = "v_from long, v_to long"
 
 
-def _manifest(root: str, version: int) -> dict:
-    if version == 0:
-        return {"files": [], "n_buckets": None}
-    with open(os.path.join(root, "snapshots", f"v{version:010d}.json")) as f:
-        return json.load(f)
-
-
-def _current_version(root: str) -> int:
-    try:
-        with open(os.path.join(root, "_current.json")) as f:
-            return json.load(f)["version"]
-    except FileNotFoundError:
-        return 0
-
-
-class _BucketDiff(InputPartition):
-    """One bucket's file diff: the files added in (from, to] plus the
-    from-snapshot files needed to classify them."""
-
-    def __init__(self, new_paths: list, from_paths: list):
-        self.new_paths = new_paths
-        self.from_paths = from_paths
-
-
-def _plan_partitions(root: str, v_from: int, v_to: int) -> list:
-    m_from = _manifest(root, v_from)
-    m_to = _manifest(root, v_to)
-    from_set = {f["path"] for f in m_from["files"]}
-    new_files = [f for f in m_to["files"] if f["path"] not in from_set]
-    if not new_files:
-        return []
-    same_spec = m_from.get("n_buckets") == m_to.get("n_buckets")
-    parts = []
-    by_bucket: dict[int, list] = {}
-    for f in new_files:
-        by_bucket.setdefault(f["bucket"], []).append(f["path"])
-    all_from = [f["path"] for f in m_from["files"]]
-    for bucket, paths in sorted(by_bucket.items()):
-        if same_spec:
-            from_paths = [
-                f["path"] for f in m_from["files"] if f["bucket"] == bucket
-            ]
-        else:
-            # spec changed between the snapshots (rebucket): bucket ids
-            # are not comparable, classify against the full from state
-            from_paths = all_from
-        parts.append(_BucketDiff(paths, from_paths))
-    return parts
-
-
-def _tie_hash(row) -> int:
-    parts = (row["op"], row["role"], row["text"], row["tool"], str(row["ts"]))
-    h = hashlib.sha1("|".join("" if p is None else str(p) for p in parts).encode())
-    return int.from_bytes(h.digest()[:8], "big")
-
-
-def _lww_winners(df):
-    """LWW winner per key: max lsn, deterministic payload-hash
-    tie-break (ties only exist under duplicate-lsn redelivery, so hash
-    only those rows)."""
-    import pandas as pd
-
-    dup = df.duplicated(["conv_id", "turn_idx", "lsn"], keep=False)
-    tie = pd.Series(0, index=df.index, dtype="uint64")
-    if dup.any():
-        tie[dup] = df[dup].apply(_tie_hash, axis=1).astype("uint64")
-    return (
-        df.assign(_tie=tie)
-        .sort_values(["lsn", "_tie"], kind="mergesort")
-        .drop_duplicates(["conv_id", "turn_idx"], keep="last")
-        .drop(columns="_tie")
-    )
-
-
-def _read_diff(partition: _BucketDiff, images: bool = False):
-    """Executor-side per-bucket diff: pyarrow scan + pandas LWW.
-
-    ``images=True`` emits Delta-CDF row images (mirroring
-    ``SnapshotTable.changes_between(images=True)``): updates become
-    ``update_preimage``/``update_postimage`` pairs and deletes carry the
-    DELETED row's payload — which costs a second, WIDE read of the
-    bucket's from-side files (the default path reads them narrow)."""
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    new = pd.concat(
-        [pq.read_table(p).to_pandas() for p in partition.new_paths],
-        ignore_index=True,
-    )
-    cand = _lww_winners(new)
-
-    if partition.from_paths:
-        frm = pd.concat(
-            [
-                pq.read_table(p, columns=_FROM_COLS).to_pandas()
-                for p in partition.from_paths
-            ],
-            ignore_index=True,
-        )
-        code = frm["op"].map({"I": 0, "U": 1, "D": 2}).astype("int64")
-        frm = frm.assign(_pk=(frm["lsn"].astype("int64") * 4 + code))
-        state = (
-            frm.groupby(["conv_id", "turn_idx"], as_index=False)["_pk"].max()
-        )
-        cand = cand.merge(state, on=["conv_id", "turn_idx"], how="left")
-    else:
-        cand = cand.assign(_pk=pd.NA)
-
-    pk = cand["_pk"]
-    has_from = pk.notna()
-    from_lsn = pk.where(has_from).astype("float64") // 4
-    progressed = ~has_from | (cand["lsn"].astype("float64") > from_lsn)
-    from_live = has_from & (pk.where(has_from).astype("float64") % 4 != 2)
-    is_del = cand["op"] == "D"
-    out = cand[progressed & (~is_del | from_live)].copy()
-    if out.empty:
-        return
-    is_del = out["op"] == "D"
-    live_before = from_live[out.index]
-    out["change_type"] = "insert"
-    out.loc[live_before & ~is_del, "change_type"] = "update"
-    out.loc[is_del, "change_type"] = "delete"
-    cols = ["change_type", "conv_id", "turn_idx", "role", "text", "tool",
-            "ts", "lsn"]
-    if images:
-        need_pre = out[out["change_type"].isin(["update", "delete"])]
-        frames = [
-            out[out["change_type"] != "delete"]
-            .assign(change_type=lambda d: d["change_type"].map(
-                {"insert": "insert", "update": "update_postimage"}))[cols]
-        ]
-        if not need_pre.empty:
-            old = _lww_winners(pd.concat(
-                [pq.read_table(p).to_pandas() for p in partition.from_paths],
-                ignore_index=True,
-            )).merge(
-                need_pre[["conv_id", "turn_idx", "change_type"]].rename(
-                    columns={"change_type": "_ct"}
-                ).assign(_chg_lsn=need_pre["lsn"].values),
-                on=["conv_id", "turn_idx"],
-            )
-            old["change_type"] = old["_ct"].map(
-                {"update": "update_preimage", "delete": "delete"}
-            )
-            # delete rows carry the OLD payload with the tombstone's lsn
-            # (the progression marker); preimages keep the old lsn
-            old.loc[old["_ct"] == "delete", "lsn"] = old.loc[
-                old["_ct"] == "delete", "_chg_lsn"
-            ]
-            frames.append(old[cols])
-        out = pd.concat(frames, ignore_index=True)
-    for r in out.itertuples(index=False):
-        ts = None if pd.isna(r.ts) else r.ts.to_pydatetime()
-        yield (
-            r.change_type,
-            r.conv_id,
-            int(r.turn_idx),
-            None if r.role is None else r.role,
-            None if r.text is None else r.text,
-            None if r.tool is None else r.tool,
-            ts,
-            int(r.lsn),
-        )
-
-
-class _BatchReader(DataSourceReader):
-    def __init__(self, options):
-        self.root = options.get("path")
-        assert self.root, "table_changes requires .option('path', table_root)"
-        self.v_from = int(options.get("from_version", 0))
-        v_to = options.get("to_version")
-        self.v_to = int(v_to) if v_to is not None else _current_version(self.root)
-        self.images = str(options.get("images", "false")).lower() == "true"
-
-    def partitions(self):
-        return _plan_partitions(self.root, self.v_from, self.v_to)
-
-    def read(self, partition: _BucketDiff):
-        yield from _read_diff(partition, images=self.images)
-
-
-class _StreamReader(DataSourceStreamReader):
-    """Version-offset micro-batch stream: each trigger covers the
-    snapshot span committed since the last one."""
+class _SpanReader(DataSourceStreamReader):
+    """Version-offset micro-batch stream: each trigger is the snapshot
+    span committed since the last one."""
 
     def __init__(self, options):
         self.root = options.get("path")
-        assert self.root, "table_changes requires .option('path', table_root)"
+        if not self.root:
+            raise ValueError("table_changes requires .option('path', table_root)")
         self.start = int(options.get("start_version", 0))
-        self.images = str(options.get("images", "false")).lower() == "true"
 
     def initialOffset(self):
         return {"version": self.start}
 
     def latestOffset(self):
-        return {"version": _current_version(self.root)}
+        return {"version": ref_version(self.root)}
 
     def partitions(self, start, end):
-        return _plan_partitions(self.root, start["version"], end["version"])
+        return [InputPartition((start["version"], end["version"]))]
 
-    def read(self, partition: _BucketDiff):
-        yield from _read_diff(partition, images=self.images)
+    def read(self, partition):
+        yield partition.value
 
     def commit(self, end):
         pass  # replayable from any retained snapshot: nothing to ack
-
-    def stop(self):
-        pass
 
 
 class TableChangesDataSource(DataSource):
@@ -276,11 +66,8 @@ class TableChangesDataSource(DataSource):
     def schema(self):
         return SCHEMA
 
-    def reader(self, schema):
-        return _BatchReader(self.options)
-
     def streamReader(self, schema):
-        return _StreamReader(self.options)
+        return _SpanReader(self.options)
 
 
 def register(spark) -> None:

@@ -1,10 +1,11 @@
 """Incremental near-duplicate index maintenance from the change feed.
 
 This closes the loop between the engine's two pillars: the CDC change
-feed (sources/table_changes.py) and the corpus-curation operators
-(functions/textops.py).  A large-scale training-data pipeline cannot
-re-run MinHash over the whole corpus every time documents arrive — the
-near-dup INDEX itself must be a maintained derived table:
+feed (``changes_between``, tailed by streaming/pipeline.start_change_feed)
+and the corpus-curation operators (functions/textops.py).  A
+large-scale training-data pipeline cannot re-run MinHash over the whole
+corpus every time documents arrive — the near-dup INDEX itself must be
+a maintained derived table:
 
     bronze (transcripts) ──change feed──▶ signature index (SnapshotTable)
 
@@ -46,7 +47,7 @@ from ..functions.textops import (
     minhash_signatures_text,
 )
 from ..plans.table import SnapshotTable
-from .pipeline import start_foreach_batch
+from .pipeline import start_change_feed
 
 #: signature parameters — fixed per index (changing them requires a
 #: rebuild, like changing a tokenizer); 32 hashes / 8 bands of 4 rows
@@ -249,16 +250,9 @@ def start_dedup_index_stream(
     start_derived_stream: bounded catch-up with ``available_now=True``
     (drive through streaming/pipeline.drain_catchup), exactly-once per
     micro-batch."""
-    from ..sources.table_changes import register
-
-    register(spark)
-    feed = (
-        spark.readStream.format("table_changes")
-        .option("path", bronze_root)
-        .load()
-    )
-
     def apply_fn(batch_df: DataFrame, batch_id: int) -> None:
         index.merge_apply(signature_events(batch_df), batch_id)
 
-    return start_foreach_batch(feed, apply_fn, checkpoint_dir, available_now)
+    return start_change_feed(
+        spark, bronze_root, apply_fn, checkpoint_dir, available_now
+    )

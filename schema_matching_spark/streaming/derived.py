@@ -1,13 +1,13 @@
 """Derived-table maintenance: bronze → silver medallion pipeline.
 
-The CDC-out connector (sources/table_changes.py) makes the snapshot
-table a streaming source of its own change feed; this module closes the
-loop by applying that feed into a DOWNSTREAM SnapshotTable, maintaining
-a filtered/transformed VIEW of the upstream table incrementally —
-the Delta/Iceberg "silver table" shape.  Each hop is exactly-once on
-its own (source offsets = snapshot versions in the checkpoint; sink =
-the applied-batch ledger), so the pipeline composes end-to-end without
-a distributed transaction.
+``streaming/pipeline.start_change_feed`` tails the snapshot table's own
+change feed (``changes_between`` per snapshot span of the
+``table_changes`` stream); this module closes the loop by applying that
+feed into a DOWNSTREAM SnapshotTable, maintaining a filtered/transformed
+VIEW of the upstream table incrementally — the Delta/Iceberg "silver
+table" shape.  Each hop is exactly-once on its own (source offsets =
+snapshot versions in the checkpoint; sink = the applied-batch ledger),
+so the pipeline composes end-to-end without a distributed transaction.
 
 Incremental view maintenance for a filter+project view of a KEYED
 table is exact with one rule: an upstream change whose row LEAVES the
@@ -31,7 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.table import SnapshotTable
 from ..schemas import TRANSCRIPT_COLS
-from .pipeline import start_foreach_batch
+from .pipeline import start_change_feed
 
 
 def derived_events(
@@ -130,8 +130,8 @@ def rollup_events(feed: DataFrame, bronze: SnapshotTable) -> DataFrame:
 
 
 def rollup_retract_events(image_feed: DataFrame, gold: SnapshotTable) -> DataFrame:
-    """Map one pre/post-image micro-batch (``table_changes`` with
-    ``images=true``, or ``changes_between(images=True)``) to the change
+    """Map one pre/post-image feed (``changes_between(images=True)``,
+    streamed by ``start_change_feed(images=True)``) to the change
     events maintaining the per-conversation rollup SUBTRACTIVELY —
     no upstream read at all.
 
@@ -249,16 +249,7 @@ def start_rollup_stream(
     high-watermark."""
     if strategy not in ("recompute", "retract"):
         raise ValueError(f"unknown rollup strategy {strategy!r}")
-    from ..sources.table_changes import register
-
-    register(spark)
     bronze = SnapshotTable(spark, bronze_root)
-    reader = (
-        spark.readStream.format("table_changes").option("path", bronze_root)
-    )
-    if strategy == "retract":
-        reader = reader.option("images", "true")
-    feed = reader.load()
 
     def apply_fn(batch_df: DataFrame, batch_id: int) -> None:
         if strategy == "retract":
@@ -266,7 +257,10 @@ def start_rollup_stream(
         else:
             gold.merge_apply(rollup_events(batch_df, bronze), batch_id)
 
-    return start_foreach_batch(feed, apply_fn, checkpoint_dir, available_now)
+    return start_change_feed(
+        spark, bronze_root, apply_fn, checkpoint_dir, available_now,
+        images=strategy == "retract",
+    )
 
 
 def start_derived_stream(
@@ -283,19 +277,12 @@ def start_derived_stream(
     catch-up run (process every committed snapshot span, then stop) —
     schedule it per orchestration tick, or pass False to tail
     continuously."""
-    from ..sources.table_changes import register
-
-    register(spark)
-    feed = (
-        spark.readStream.format("table_changes")
-        .option("path", bronze_root)
-        .load()
-    )
-
     def apply_fn(batch_df: DataFrame, batch_id: int) -> None:
         silver.merge_apply(
             derived_events(batch_df, predicate=predicate, transform=transform),
             batch_id,
         )
 
-    return start_foreach_batch(feed, apply_fn, checkpoint_dir, available_now)
+    return start_change_feed(
+        spark, bronze_root, apply_fn, checkpoint_dir, available_now
+    )

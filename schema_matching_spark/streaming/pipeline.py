@@ -35,6 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import dedup_stream
 from ..plans.table import SnapshotTable
+from ..sources.table_changes import register as register_table_changes
 from ..sources.wal import read_stream
 
 
@@ -227,6 +228,39 @@ def start_foreach_batch(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def start_change_feed(
+    spark: SparkSession,
+    root: str,
+    apply_fn,
+    checkpoint_dir: str,
+    available_now: bool = True,
+    images: bool = False,
+    start_version: int = 0,
+) -> StreamingQuery:
+    """Tail the change feed of the snapshot table at ``root``: each
+    micro-batch calls ``apply_fn(feed, batch_id)`` with
+    ``changes_between(v_from, v_to, images=images)`` for the snapshot
+    span the ``table_changes`` stream hands it (sources/table_changes.py;
+    offsets are versions, starting after ``start_version``).  Every
+    downstream hop is this starter plus its own ``apply_fn``, so it
+    sees exactly the rows a batch ``changes_between`` read sees.
+    ``apply_fn`` runs even when the span's feed is empty."""
+    register_table_changes(spark)
+    table = SnapshotTable(spark, root)
+    spans = (
+        spark.readStream.format("table_changes")
+        .option("path", root)
+        .option("start_version", start_version)
+        .load()
+    )
+
+    def span_fn(span_df: DataFrame, batch_id: int) -> None:
+        [(v_from, v_to)] = span_df.collect()  # one row per micro-batch
+        apply_fn(table.changes_between(v_from, v_to, images=images), batch_id)
+
+    return start_foreach_batch(spans, span_fn, checkpoint_dir, available_now)
 
 
 #: Error signatures of driver-side Python-worker spawn failures.  The

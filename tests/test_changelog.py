@@ -92,6 +92,20 @@ def test_changelog_multi_commit_span_and_empty(spark, tmp_path):
     empty = table.changes_between(v4, v4)
     assert empty.count() == 0
     assert empty.columns[0] == "change_type"
+    # from genesis: every live key, each an insert
+    genesis = table.changes_between(0)
+    assert _collect_changelog(genesis) == _expected_changelog([], flat(4))
+    assert genesis.count() == table.read().count()
+    # a span across rebucket(): bucket ids are not comparable between
+    # the two specs, so the from-side is the whole v1 state
+    table.rebucket(16)
+    log5 = changes(
+        spark, 700, n_conv=30, turns_per_conv=10, lsn_start=lsn, partitions=4
+    )
+    logs.append(log5.collect())
+    apply_batch(table, log5, "b4")
+    expected = _expected_changelog(flat(1), flat(5))
+    assert _collect_changelog(table.changes_between(v1)) == expected
 
 
 def test_changelog_values_match_pure_sql(spark, tmp_path):

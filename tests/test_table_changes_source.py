@@ -1,6 +1,7 @@
-"""CDC-out connector (sources/table_changes.py): batch and streaming
-reads of the table's own change feed, pinned against
-SnapshotTable.changes_between and across checkpoint restarts."""
+"""CDC-out stream (sources/table_changes.py + streaming/pipeline
+start_change_feed): the streamed feed equals SnapshotTable.changes_between
+row for row — payloads included, under jittered redelivery — and resumes
+across checkpoint restarts."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,13 +9,7 @@ from pyspark.sql import functions as F
 from schema_matching_spark.operators.apply import apply_batch
 from schema_matching_spark.plans.table import SnapshotTable
 from schema_matching_spark.sources.generator import changes
-from schema_matching_spark.sources.table_changes import TableChangesDataSource
-
-
-@pytest.fixture(scope="module")
-def registered(spark):
-    spark.dataSource.register(TableChangesDataSource)
-    return spark
+from schema_matching_spark.streaming.pipeline import drain_catchup, start_change_feed
 
 
 def _feed_dict(rows):
@@ -24,72 +19,52 @@ def _feed_dict(rows):
     }
 
 
+def _full_rows(rows):
+    return sorted(
+        (r["change_type"], r["conv_id"], r["turn_idx"], r["role"], r["text"],
+         r["tool"], r["ts"], r["lsn"])
+        for r in rows
+    )
+
+
+def _batch_log(spark, n, lsn):
+    return changes(
+        spark, n, n_conv=30, turns_per_conv=10, lsn_start=lsn, partitions=4
+    )
+
+
 def _build(spark, root, batches, mode="cow", n_buckets=8):
     table = SnapshotTable(spark, root, n_buckets=n_buckets, mode=mode)
     versions = [0]
     lsn = 0
     for i, n in enumerate(batches):
-        log = changes(
-            spark, n, n_conv=30, turns_per_conv=10, lsn_start=lsn, partitions=4
-        )
-        apply_batch(table, log, f"b{i}")
+        apply_batch(table, _batch_log(spark, n, lsn), f"b{i}")
         versions.append(table.current_version())
         lsn += n
     return table, versions
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_batch_read_matches_changes_between(registered, tmp_path, mode):
-    spark = registered
-    table, vs = _build(spark, str(tmp_path / mode), [3000, 1000, 800], mode=mode)
-    for v_from in (vs[1], vs[2]):
-        src = (
-            spark.read.format("table_changes")
-            .option("path", table.root)
-            .option("from_version", v_from)
-            .load()
+def _drain_to_parquet(spark, root, out, ckpt, **kwargs):
+    """Drain ``root``'s change feed into an append-only parquet sink."""
+    drain_catchup(
+        lambda: start_change_feed(
+            spark,
+            root,
+            lambda feed, _bid: feed.write.mode("append").parquet(out),
+            ckpt,
+            **kwargs,
         )
-        expected = _feed_dict(table.changes_between(v_from).collect())
-        actual = _feed_dict(src.collect())
-        assert actual == expected
-        assert len(actual) > 0
-
-
-def test_batch_read_from_genesis_is_all_inserts(registered, tmp_path):
-    spark = registered
-    table, _ = _build(spark, str(tmp_path / "g"), [2500])
-    src = (
-        spark.read.format("table_changes").option("path", table.root).load()
     )
-    rows = src.collect()
-    state = table.read().collect()
-    assert len(rows) == len(state)
-    assert {r["change_type"] for r in rows} == {"insert"}
 
 
-def test_stream_drains_and_resumes_across_commits(registered, tmp_path):
-    spark = registered
+def test_stream_drains_and_resumes_across_commits(spark, tmp_path):
     root = str(tmp_path / "t")
     table, vs = _build(spark, root, [3000, 1000])
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
     def drain():
-        from schema_matching_spark.streaming.pipeline import drain_catchup
-
-        drain_catchup(
-            lambda: (
-                spark.readStream.format("table_changes")
-                .option("path", root)
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        )
+        _drain_to_parquet(spark, root, out, ckpt)
 
     drain()
     first = _feed_dict(spark.read.parquet(out).collect())
@@ -113,46 +88,37 @@ def test_stream_drains_and_resumes_across_commits(registered, tmp_path):
     )
 
 
-def test_stream_spans_rebucket_boundary(registered, tmp_path):
-    spark = registered
+@pytest.mark.parametrize("images", [False, True], ids=["net", "images"])
+def test_stream_matches_changes_between_under_jittered_redelivery(
+    spark, tmp_path, images
+):
+    """A redelivery of batch b1 with a jittered payload (same lsn, new
+    text) leaves two candidate rows per key; the streamed feed must pick
+    the same survivor as changes_between and read() (the engine's one
+    winner_order tie-break), not a payload of its own."""
     root = str(tmp_path / "t")
-    table, vs = _build(spark, root, [2500])
-    table.rebucket(16)
-    log2 = changes(
-        spark, 700, n_conv=30, turns_per_conv=10, lsn_start=2500, partitions=4
+    table, vs = _build(spark, root, [3000, 1000, 800], mode="mor")
+    jittered = _batch_log(spark, 1000, 3000).withColumn(
+        "text", F.concat(F.col("text"), F.lit("~j"))
     )
-    apply_batch(table, log2, "b1")
-    src = (
-        spark.read.format("table_changes")
-        .option("path", root)
-        .option("from_version", vs[1])
-        .load()
+    apply_batch(table, jittered, "b1-redelivery")
+
+    out = str(tmp_path / "out")
+    _drain_to_parquet(
+        spark, root, out, str(tmp_path / "ckpt"),
+        images=images, start_version=vs[1],
     )
-    assert _feed_dict(src.collect()) == _feed_dict(
-        table.changes_between(vs[1]).collect()
+    streamed = _full_rows(spark.read.parquet(out).collect())
+    assert streamed == _full_rows(
+        table.changes_between(vs[1], images=images).collect()
     )
 
-
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_batch_images_match_changes_between_images(registered, tmp_path, mode):
-    """images=true parity: full-row (payload-level) equality with
-    changes_between(images=True) — unique-lsn logs, so even the
-    tie-break paths agree."""
-    spark = registered
-    table, vs = _build(
-        spark, str(tmp_path / f"img_{mode}"), [3000, 1200], mode=mode
-    )
-    src = (
-        spark.read.format("table_changes")
-        .option("path", table.root)
-        .option("from_version", vs[1])
-        .option("images", "true")
-        .load()
-    )
-    key = lambda r: (r["change_type"], r["conv_id"], r["turn_idx"], r["role"],
-                     r["text"], r["tool"], r["ts"], r["lsn"])
-    expected = sorted(map(key, table.changes_between(vs[1], images=True).collect()))
-    actual = sorted(map(key, src.collect()))
-    assert actual == expected
-    types = {r[0] for r in actual}
-    assert {"update_preimage", "update_postimage", "delete"} <= types
+    state = {(r["conv_id"], r["turn_idx"]): r["text"] for r in table.read().collect()}
+    post = [
+        (c, t, text) for ct, c, t, _role, text, *_ in streamed
+        if ct in ("insert", "update", "update_postimage")
+    ]
+    assert post
+    assert all(state[(c, t)] == text for c, t, text in post)
+    # the span really holds tied keys whose jittered payload won
+    assert any(text is not None and text.endswith("~j") for *_, text in post)
