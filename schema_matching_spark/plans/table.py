@@ -439,6 +439,11 @@ class SnapshotTable:
                         heads.append((fn[:-5], kind, _read_pointer(path)))
         return heads
 
+    def batch_applied(self, batch_id: str | int) -> bool:
+        """True iff ``batch_id`` is in the current snapshot's
+        applied-batch ledger (a re-apply would be a no-op)."""
+        return _batch_applied(self.manifest(), batch_id)
+
     def manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
         if v == 0:

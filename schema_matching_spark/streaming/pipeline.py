@@ -129,6 +129,14 @@ def start_cdc_stream(
 
         from ..schemas import CHANGE_COLS
 
+        if table.batch_applied(batch_id):
+            # Replay of a batch whose merge committed before the query
+            # stopped, ahead of Spark's commit-log write.  The merge would
+            # be a no-op, but the watermarked dedup upstream commits its
+            # state store only when every partition of the batch runs —
+            # skipping the batch fails STATE_STORE_COMMIT_VALIDATION.
+            batch_df.write.format("noop").mode("overwrite").save()
+            return
         persisted = []
         dlq_counts: dict[str, int] = {}
         if dlq_split is not None:

@@ -73,6 +73,28 @@ def test_stream_restart_noop_when_drained(spark, log, tmp_path):
     assert table.current_version() == v1
 
 
+def test_replay_of_merged_batch_after_lost_offset_commit(spark, log, tmp_path):
+    """Crash window between the sink's merge commit and Spark's commit-log
+    write: the restarted query replays the last batch, which the ledger
+    already holds.  The replay must still run the whole micro-batch (the
+    watermarked dedup's state store commits only then) and leave the
+    table untouched."""
+    wal = str(tmp_path / "wal")
+    cp = str(tmp_path / "cp")
+    write_segments(log, wal, n_segments=3)
+    table = SnapshotTable(spark, str(tmp_path / "table"), n_buckets=4)
+    run_stream_to_completion(spark, wal, table, cp, max_files_per_trigger=1)
+    v1 = table.current_version()
+    commits = os.path.join(cp, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(commits, f))
+    run_stream_to_completion(spark, wal, table, cp, max_files_per_trigger=1)
+    assert table.current_version() == v1
+    assert str(last) in os.listdir(commits)
+    assert states_equal(table.read(), expected_state(log))
+
+
 def test_wal_roundtrip(spark, log, tmp_path):
     wal = str(tmp_path / "wal")
     write_segments(log, wal, n_segments=4)

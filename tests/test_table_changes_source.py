@@ -57,6 +57,19 @@ def _drain_to_parquet(spark, root, out, ckpt, **kwargs):
     )
 
 
+def test_batch_read_from_genesis_is_all_inserts(spark, tmp_path):
+    """A feed drained from version 0 holds every live key once, each as
+    an insert."""
+    root = str(tmp_path / "g")
+    table, _ = _build(spark, root, [2500])
+    out = str(tmp_path / "out")
+    _drain_to_parquet(spark, root, out, str(tmp_path / "ckpt"))
+    rows = spark.read.parquet(out).collect()
+    state = table.read().collect()
+    assert len(rows) == len(state)
+    assert {r["change_type"] for r in rows} == {"insert"}
+
+
 def test_stream_drains_and_resumes_across_commits(spark, tmp_path):
     root = str(tmp_path / "t")
     table, vs = _build(spark, root, [3000, 1000])
@@ -86,6 +99,22 @@ def test_stream_drains_and_resumes_across_commits(spark, tmp_path):
     assert cumulative.count() == len(first) + len(
         _feed_dict(table.changes_between(vs[2]).collect())
     )
+
+
+def test_stream_spans_rebucket_boundary(spark, tmp_path):
+    """A streamed span that crosses rebucket() equals changes_between
+    over the same span."""
+    root = str(tmp_path / "t")
+    table, vs = _build(spark, root, [2500])
+    table.rebucket(16)
+    apply_batch(table, _batch_log(spark, 700, 2500), "b1")
+    out = str(tmp_path / "out")
+    _drain_to_parquet(
+        spark, root, out, str(tmp_path / "ckpt"), start_version=vs[1]
+    )
+    streamed = _feed_dict(spark.read.parquet(out).collect())
+    assert streamed == _feed_dict(table.changes_between(vs[1]).collect())
+    assert len(streamed) > 0
 
 
 @pytest.mark.parametrize("images", [False, True], ids=["net", "images"])
