@@ -110,13 +110,3 @@ def connected_components(
         if n_changed == 0:
             break
     return labels.select("node", F.col("label").alias("component"))
-
-
-def cluster_stats(components: DataFrame) -> DataFrame:
-    """One row: cluster count / sizes over a (node, component) frame."""
-    per = components.groupBy("component").agg(F.count("*").alias("sz"))
-    return per.agg(
-        F.count("*").alias("n_clusters"),
-        F.max("sz").alias("max_cluster_size"),
-        F.sum("sz").alias("n_clustered_docs"),
-    )

@@ -5,10 +5,8 @@ array ops) or Arrow-batched numpy — never per-row Python.  Hashes are
 xxhash64/md5/crc32 (deterministic), never Python hash().
 
 Operators (driver brief: first-class alongside SURVEY.md §2):
-* tokenization + token counting (whitespace and BPE-ish regex)
-* quality scoring (length / punctuation / stopword ratios)
-* language-ID (char n-gram profile heuristic)
-* document fingerprinting (md5 + rolling polynomial hash)
+* whitespace tokens, character shingles (language-ID and SimHash
+  input) and token n-grams
 * MinHash signatures + LSH banding for near-dup candidate pairs
 * SimHash (64-bit) + Hamming-band near-dup candidates
 * exact n-gram Jaccard verification
@@ -20,8 +18,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
-
 # ----------------------------------------------------------------- tokens
 
 
@@ -29,69 +25,6 @@ def tokens_col(text: Column | str) -> Column:
     """Whitespace tokens of trimmed text (JVM split, no Python)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.split(F.trim(c), r"\s+")
-
-
-def token_count(text: Column | str) -> Column:
-    return F.size(tokens_col(text))
-
-
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """BPE-ish token estimate: runs of alphanumerics and individual
-    punctuation marks each count as one token (RE2-safe pattern so the
-    DuckDB oracle can mirror it exactly)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_count(c, F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"))
-
-
-# ---------------------------------------------------------------- quality
-
-
-def quality_features(text: Column | str) -> dict[str, Column]:
-    """Length / punctuation-ratio / stopword-ratio features, all JVM-side."""
-    c = F.col(text) if isinstance(text, str) else text
-    length = F.length(c)
-    n_punct = length - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    toks = tokens_col(c)
-    n_tokens = F.size(toks)
-    n_stop = F.size(F.filter(toks, lambda t: F.lower(t).isin(STOPWORDS)))
-    return {
-        "n_chars": length,
-        "n_tokens": n_tokens,
-        "punct_ratio": F.round(n_punct / F.greatest(length, F.lit(1)), 6),
-        "stopword_ratio": F.round(n_stop / F.greatest(n_tokens, F.lit(1)), 6),
-        "avg_token_len": F.round(length / F.greatest(n_tokens, F.lit(1)), 6),
-    }
-
-
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1] quality heuristic: long enough, not punctuation
-    soup, some-but-not-all stopwords."""
-    f = quality_features(text)
-    len_score = F.least(f["n_tokens"] / F.lit(50.0), F.lit(1.0))
-    punct_score = 1 - F.least(f["punct_ratio"] * 5, F.lit(1.0))
-    stop_score = 1 - F.abs(f["stopword_ratio"] - 0.4) / F.lit(0.6)
-    return F.round((len_score + punct_score + F.greatest(stop_score, F.lit(0.0))) / 3, 6)
-
-
-# ------------------------------------------------------------ fingerprints
-
-
-def md5_fingerprint(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.md5(F.lower(F.trim(c)))
-
-
-def rolling_fingerprint(text: Column | str, window: int = 8) -> Column:
-    """Rolling polynomial hash: min over sliding token windows of
-    xxhash64(window-join) — a winnowing-style document fingerprint that
-    is robust to content shifts.  Pure higher-order JVM expressions."""
-    toks = tokens_col(text)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)))
-    window_hashes = F.transform(
-        idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, window)))
-    )
-    return F.array_min(window_hashes)
 
 
 # ------------------------------------------------------------------ shingles

@@ -666,7 +666,7 @@ def q_dedup_index_sync(spark, sf_dir):
         actual = index.read().select(
             "conv_id", "turn_idx", F.col("text").alias("a_sig")
         )
-        cmp = expected.join(actual, ["conv_id", "turn_idx"], "full_outer")
+        cmp = expected.join(actual, ["conv_id", "turn_idx"], "full")
         # materialize the one counter row BEFORE the scratch tables are
         # reclaimed (the returned DataFrame must not reference them)
         row = cmp.agg(

@@ -177,7 +177,7 @@ def q_contamination_check(spark, sf_dir):
     deterministically: docs with doc_id % 97 == 0 form the benchmark;
     the training split is everything else PLUS a shifted copy
     (``substring(text, 30)``) of each benchmark doc under a new id —
-    a partial passage copy, which character-aligned fingerprints would
+    a partial passage copy, which character-aligned hashes would
     miss but word grams catch from the second word onward.
 
     Scale posture: the benchmark side is tiny relative to the corpus
@@ -321,82 +321,11 @@ ORDER BY doc_id, chunk_idx
 """
 
 
-#: epoch-shuffle parameters: shards per epoch, epochs materialized.
-SHUFFLE_SHARDS = 8
-SHUFFLE_EPOCHS = 2
-
-
-def q_epoch_shuffle(spark, sf_dir):
-    """Deterministic training-epoch shuffle: every epoch assigns each
-    document a pseudo-random shard and an intra-shard position from
-    md5(epoch || ':' || doc_id) — a pure function of (epoch, doc), so
-    any engine/cluster-size/restart reproduces byte-identical epoch
-    order (the reproducibility contract data-loading audits require),
-    and successive epochs are independent permutations.
-
-    Scale posture: the ONLY exchange is the shard hash-partition and
-    the per-(epoch, shard) row_number sorts shard-local slices — a
-    global permutation without any global sort.  At 100 TB each shard
-    is a writer task's worth of data; text never moves, only
-    (doc_id, 16-byte key).
-    """
-    d = _docs(spark, sf_dir).select("doc_id")
-    epochs = d.select(
-        "doc_id",
-        F.explode(
-            F.array(*[F.lit(i) for i in range(SHUFFLE_EPOCHS)])
-        ).alias("epoch"),
-    )
-    keyed = epochs.select(
-        F.col("epoch").cast("long").alias("epoch"),
-        "doc_id",
-        F.md5(
-            F.concat_ws(":", F.col("epoch").cast("string"),
-                        F.col("doc_id").cast("string"))
-        ).alias("skey"),
-    ).withColumn(
-        "shard",
-        (F.conv(F.substring("skey", 1, 6), 16, 10).cast("long")
-         % SHUFFLE_SHARDS),
-    )
-    w = Window.partitionBy("epoch", "shard").orderBy("skey")
-    return (
-        keyed.withColumn("pos", F.row_number().over(w).cast("long"))
-        .select("epoch", "shard", "pos", "doc_id")
-        .orderBy("epoch", "shard", "pos")
-    )
-
-
-SQL_EPOCH_SHUFFLE = f"""
-WITH epochs AS (
-  SELECT doc_id, e.epoch
-  FROM documents, (SELECT unnest(range({SHUFFLE_EPOCHS})) AS epoch) e
-), keyed AS (
-  SELECT CAST(epoch AS BIGINT) AS epoch, doc_id,
-         md5(CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR))
-             AS skey
-  FROM epochs
-), sharded AS (
-  SELECT epoch, doc_id, skey,
-         CAST('0x' || substr(skey, 1, 6) AS BIGINT) % {SHUFFLE_SHARDS}
-             AS shard
-  FROM keyed
-)
-SELECT epoch, shard,
-       CAST(row_number() OVER (PARTITION BY epoch, shard ORDER BY skey)
-            AS BIGINT) AS pos,
-       doc_id
-FROM sharded
-ORDER BY epoch, shard, pos
-"""
-
-
 QUERIES = {
     "sequence_pack": q_sequence_pack,
     "stratified_sample": q_stratified_sample,
     "contamination_check": q_contamination_check,
     "doc_chunks": q_doc_chunks,
-    "epoch_shuffle": q_epoch_shuffle,
 }
 
 ORACLE = {
@@ -404,5 +333,4 @@ ORACLE = {
     "stratified_sample": SQL_STRATIFIED_SAMPLE,
     "contamination_check": SQL_CONTAMINATION_CHECK,
     "doc_chunks": SQL_DOC_CHUNKS,
-    "epoch_shuffle": SQL_EPOCH_SHUFFLE,
 }

@@ -9,7 +9,6 @@ from . import (
     dataprep2,
     multimodal_q,
     python_udfs,
-    relational,
     similarity,
     sources_q,
 )
@@ -22,7 +21,6 @@ _MODULES = [
     sources_q,
     python_udfs,
     cdc,
-    relational,
 ]
 
 # The driver's correctness gate evaluates EXACTLY the first 50 registry
@@ -30,52 +28,20 @@ _MODULES = [
 # never get a driver row).  LEAD makes the window explicit and
 # auditable: the 50 LLM-data-pipeline + CDC queries, in pack order.
 #
-# Round-4 swaps (VERDICT r3 #2/#4): IN — variant_extract (then the only
-# registered query never driver-checked) and dedup_index_sync (driver
-# evidence for the B20 incremental dedup index).  OUT — delivery_dedup
-# (driver-green r1+r2+r3, unchanged since r1) and cosine_pairs
-# (driver-green r3, unchanged, integer-quantized local exactness test).
-# Displaced entries keep strict-local oracle coverage
-# (scripts/strict_oracle_check.py walks ALL oracles, not just the lead).
-#
-# Round-4 in-session swaps: IN — debezium_parse (new Debezium-envelope
-# source adapter, exact-oracled round trip) and gdpr_purge (new
-# right-to-erasure maintenance op, rows-only + tests/test_purge.py).
-# OUT — quality_scores (driver-green r1 AND r3, unchanged) and
-# text_normalize (driver-green r3, unchanged).
-#
-# Round-4 late-session swaps: IN — bootstrap_fence (snapshot+fence
-# initial load, tests/test_bootstrap.py), multi_table_router (one-WAL
-# fan-out, tests/test_router.py), dlq_audit (malformed-envelope
-# taxonomy, tests/test_dlq.py), txn_atomic_apply (transaction-boundary
-# gate, tests/test_txn.py).  OUT — exact_dedup (driver-green r1 AND
-# r3, unchanged), token_stats (driver-green r1 AND r3, unchanged),
-# epoch_shuffle (driver-green r3, unchanged deterministic permutation),
-# fingerprints (driver-green r3, unchanged).
-#
-# Round-5 swap (VERDICT r4 #3): IN — table_maintenance (driver
-# evidence for B25 planner/tick + B26 export/restore + B27 timestamp
-# time travel, the last §2.B operators without a driver row).  OUT —
-# embedding_norms (hash-green r3 AND r4, unchanged JVM fold, oracle
-# retained strict-locally).  Also r5: bootstrap_fence /
-# multi_table_router / dlq_audit / txn_atomic_apply upgraded from
-# rows-only to exact DuckDB oracles (VERDICT r4 #6/#7) — inputs now
-# derive from the events table / pure range() arithmetic.
-#
-# The 20 entries past LEAD are the displaced ones above plus the
-# TPC-H-style queries in queries/relational.py (the four bench.HEADLINE
-# times and seven relational-operator checks).
+# The one entry past LEAD is delivery_dedup (displaced in r4): double
+# delivery deduped on the event key must reproduce the undelivered
+# events table exactly.  tests/test_oracle.py and
+# scripts/strict_oracle_check.py walk ALL oracles, so it stays checked.
 LEAD = [
-    # dataprep (9; quality_scores + text_normalize + exact_dedup +
-    # token_stats + fingerprints → tail in r4)
+    # dataprep (9)
     "corpus_curation", "near_dup_clusters",
     "pii_redact",
     "ngram_jaccard", "minhash_lsh_dedup",
     "simhash_dedup", "lang_id", "repetition_filter", "distinctive_terms",
-    # dataprep2 (4; epoch_shuffle → tail in r4)
+    # dataprep2 (4)
     "sequence_pack", "stratified_sample", "contamination_check",
     "doc_chunks",
-    # similarity (4; cosine_pairs → tail in r4, embedding_norms → r5)
+    # similarity (4)
     "knn_brute", "knn_lsh", "knn_ivf", "embedding_dedup",
     # multimodal (6)
     "multimodal_features", "frame_sample", "schema_evolution_mapping",

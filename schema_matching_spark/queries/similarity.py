@@ -231,42 +231,6 @@ def q_embedding_dedup(spark, sf_dir):
     )
 
 
-def q_embedding_norms(spark, sf_dir):
-    """Vector math surface: L2 norm + mean component per label."""
-    emb = _emb(spark, sf_dir)
-    return (
-        emb.select(
-            "label",
-            F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
-            (
-                F.aggregate(
-                    "embedding", F.lit(0.0), lambda acc, v: acc + v.cast("double")
-                )
-                / F.size("embedding")
-            ).alias("mean_c"),
-        )
-        .groupBy("label")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("norm"), 5).alias("avg_norm"),
-            F.round(F.avg("mean_c"), 6).alias("avg_mean_component"),
-        )
-        .orderBy("label")
-    )
-
-
-SQL_EMBEDDING_NORMS = """
-SELECT label, count(*) AS n,
-       round(avg(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))), 5)
-           AS avg_norm,
-       round(avg(list_sum(embedding::DOUBLE[]) / len(embedding)), 6)
-           AS avg_mean_component
-FROM embeddings
-GROUP BY label
-ORDER BY label
-"""
-
-
 IVF_TRAIN_SAMPLE_ROWS = 1 << 18  # k-means training set cap (bounded driver cost)
 
 
@@ -365,113 +329,15 @@ def q_knn_ivf(spark, sf_dir):
     )
 
 
-#: cosine-threshold for the exact similarity self-join, as an exact
-#: rational num/den (cos >= COS_NUM/COS_DEN) so the comparison stays in
-#: 64-bit integer arithmetic end-to-end — reproducible across engines
-#: with no floating-point rounding at the decision boundary.
-COS_NUM, COS_DEN = 2, 5
-
-
-def q_cosine_pairs(spark, sf_dir):
-    """Exact cosine-threshold similarity self-join: all vector pairs
-    with cosine >= 0.4, computed over integer-quantized components
-    (q = floor(x * 1000)) so the accept decision is exact 64-bit
-    integer math — `25·dot² >= 4·|a|²·|b|²` — identical in any engine.
-    This is the exactness baseline the LSH-bucketed variants
-    (embedding_dedup, knn_lsh) are recall-tested against.
-
-    Scale posture: deliberately the brute-force baseline — one side is
-    broadcast (like q_knn_brute) and the dot products run as JVM
-    higher-order folds with no Python.  At corpus scale the banded-LSH
-    `embedding_dedup` path replaces the O(n²) pair enumeration; this
-    operator is run on samples to measure that path's recall.
-    """
-    emb = _emb(spark, sf_dir)
-    qv = F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * 1000).cast("long")
-    )
-    quant = emb.select(
-        "vec_id",
-        qv.alias("qv"),
-    ).withColumn(
-        "nsq",
-        F.aggregate(
-            F.transform("qv", lambda q: q * q), F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ),
-    )
-    right = quant.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("qv").alias("qv_b"),
-        F.col("nsq").alias("nsq_b"),
-    )
-    pairs = (
-        quant.alias("a")
-        .crossJoin(F.broadcast(right))
-        .where(F.col("vec_id") < F.col("vec_b"))
-        .withColumn(
-            "dot_q",
-            F.aggregate(
-                F.zip_with("qv", "qv_b", lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ),
-        )
-    )
-    num2, den2 = COS_NUM * COS_NUM, COS_DEN * COS_DEN
-    return (
-        pairs.where(
-            (F.col("dot_q") > 0)
-            & (F.lit(den2) * F.col("dot_q") * F.col("dot_q")
-               >= F.lit(num2) * F.col("nsq") * F.col("nsq_b"))
-        )
-        .select(
-            F.col("vec_id").alias("vec_a"), "vec_b", "dot_q",
-            F.col("nsq").alias("nsq_a"), "nsq_b",
-        )
-        .orderBy("vec_a", "vec_b")
-    )
-
-
-SQL_COSINE_PAIRS = f"""
-WITH comp AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         CAST(floor(unnest(embedding)::DOUBLE * 1000) AS BIGINT) AS q
-  FROM embeddings
-), norms AS (
-  SELECT vec_id, sum(q * q) AS nsq FROM comp GROUP BY 1
-), dots AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, sum(a.q * b.q) AS dot_q
-  FROM comp a JOIN comp b ON a.i = b.i AND a.vec_id < b.vec_id
-  GROUP BY 1, 2
-)
-SELECT vec_a, vec_b,
-       CAST(dot_q AS BIGINT) AS dot_q,
-       CAST(na.nsq AS BIGINT) AS nsq_a,
-       CAST(nb.nsq AS BIGINT) AS nsq_b
-FROM dots
-JOIN norms na ON vec_a = na.vec_id
-JOIN norms nb ON vec_b = nb.vec_id
-WHERE dot_q > 0
-  AND {COS_DEN * COS_DEN} * dot_q * dot_q
-      >= {COS_NUM * COS_NUM} * na.nsq * nb.nsq
-ORDER BY vec_a, vec_b
-"""
-
-
 QUERIES = {
     "knn_brute": q_knn_brute,
     "knn_lsh": q_knn_lsh,
     "knn_ivf": q_knn_ivf,
     "embedding_dedup": q_embedding_dedup,
-    "embedding_norms": q_embedding_norms,
-    "cosine_pairs": q_cosine_pairs,
 }
 
 ORACLE = {
     "knn_brute": SQL_KNN_BRUTE,
-    "embedding_norms": SQL_EMBEDDING_NORMS,
-    "cosine_pairs": SQL_COSINE_PAIRS,
     # knn_lsh / knn_ivf / embedding_dedup: engine-internal hyperplanes /
     # k-means state — rows-only, recall-tested vs brute force
 }

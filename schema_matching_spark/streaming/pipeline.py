@@ -61,7 +61,7 @@ def start_cdc_stream(
 
     ``evolver``: optional callable ``(batch_df) -> batch_df`` inserted
     before the collapse — the schema-evolution mapper (B7) hooks in
-    here (see operators/evolve.make_aligner).
+    here (see operators/evolve.EvolutionAligner).
 
     ``maintenance_every``: if set, every N applied micro-batches the
     sink runs ``table.compact()`` (folds MOR deltas / small files) and

@@ -11,6 +11,7 @@ Usage: python scripts/dump_plans.py   (writes PLANS.md at the repo root)
 import io
 import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -43,7 +44,10 @@ def formatted(df) -> str:
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from schema_matching_spark.plans.table import SnapshotTable
     from schema_matching_spark.session import get_spark
+    from schema_matching_spark.sources import wal as wal_mod
+    from schema_matching_spark.sources.generator import changes
 
     spark = get_spark("plans", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
@@ -55,11 +59,20 @@ def main() -> None:
     def add(name, note, df):
         sections.append((name, note, formatted(df)))
 
+    # lead with the CDC merge path: bucket collapse over a generated
+    # micro-batch
+    t = SnapshotTable(
+        spark, tempfile.mkdtemp(prefix="plans_t_"), n_buckets=8
+    )
+    log = changes(spark, 2000, n_conv=20, turns_per_conv=10, partitions=4)
     add(
-        "pricing_summary (flagship agg)",
-        "Filter + project must reach the parquet scan (PushedFilters / "
-        "ReadSchema); the aggregate runs inside one WholeStageCodegen span.",
-        queries["pricing_summary"](spark, SF),
+        "_bucket_collapse (the one true commit shuffle)",
+        "repartition(_bucket) + bucket-leading window = dedup + "
+        "clustering + writer sort in ONE Exchange (pinned by "
+        "tests/test_plans.py::test_bucket_collapse_is_single_exchange).",
+        t._bucket_collapse(
+            log.withColumn("_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(8)))
+        ),
     )
     add(
         "latest_wins (LWW collapse)",
@@ -68,22 +81,10 @@ def main() -> None:
         queries["latest_wins"](spark, SF),
     )
     add(
-        "exact_dedup (hash-keyed, never text-keyed)",
-        "The groupBy keys are (xxhash64, md5, length): ~50-byte shuffle "
-        "rows regardless of document size.",
-        queries["exact_dedup"](spark, SF),
-    )
-    add(
         "lang_id (broadcast scoring join)",
         "The <=300-row-per-language profile is broadcast into the "
         "trigram scoring join — look for BroadcastHashJoin.",
         queries["lang_id"](spark, SF),
-    )
-    add(
-        "cosine_pairs (broadcast brute baseline)",
-        "One side broadcast; dot products are JVM higher-order folds "
-        "(no BatchEvalPython anywhere).",
-        queries["cosine_pairs"](spark, SF),
     )
     add(
         "scd2_history (one sort, two windows)",
@@ -107,17 +108,10 @@ def main() -> None:
         queries["debezium_parse"](spark, SF),
     )
 
-    # the CDC merge path: bucket collapse over a generated micro-batch
-    from schema_matching_spark.plans.table import SnapshotTable
-    from schema_matching_spark.sources.generator import changes
-    import tempfile
-
     # bootstrap fence: the exact predicate merge_apply applies to the
     # incoming batch when the manifest carries fence_lsn — on a parquet
     # WAL it must land in PushedFilters (overlap replay costs zero
     # shuffle, files below the fence are row-group-skipped).
-    from schema_matching_spark.sources import wal as wal_mod
-
     wal_dir = tempfile.mkdtemp(prefix="plans_wal_")
     wal_mod.write_segments(
         changes(spark, 2000, n_conv=20, turns_per_conv=10, partitions=4),
@@ -132,20 +126,6 @@ def main() -> None:
         "snapshot/tail overlap replay is fenced out at the scan, before "
         "any exchange.",
         wal_mod.read_batch(spark, wal_dir).where(F.col("lsn") > 999),
-    )
-
-    t = SnapshotTable(
-        spark, tempfile.mkdtemp(prefix="plans_t_"), n_buckets=8
-    )
-    log = changes(spark, 2000, n_conv=20, turns_per_conv=10, partitions=4)
-    add(
-        "_bucket_collapse (the one true commit shuffle)",
-        "repartition(_bucket) + bucket-leading window = dedup + "
-        "clustering + writer sort in ONE Exchange (pinned by "
-        "tests/test_plans.py::test_bucket_collapse_is_single_exchange).",
-        t._bucket_collapse(
-            log.withColumn("_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(8)))
-        ),
     )
 
     lines = [

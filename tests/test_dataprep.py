@@ -2,17 +2,11 @@
 pipeline ops are first-class).  Recall checks for the hash-based ops the
 DuckDB oracle can't express."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from schema_matching_spark.functions import textops as T
 from schema_matching_spark.queries import dataprep as D
 from tests.conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
 
 
 def test_minhash_lsh_finds_all_planted_near_dups(spark):
@@ -47,37 +41,6 @@ def test_shingles_and_jaccard(spark):
         T.jaccard(T.char_shingles("t", 5), T.char_shingles(F.col("t2"), 5)).alias("j")
     ).collect()[0]["j"]
     assert jac == 1.0
-
-
-def test_rolling_fingerprint_shift_invariant(spark):
-    """Winnowing-style fingerprint: identical 8-token windows survive a
-    prefix shift; fingerprints of disjoint texts differ."""
-    base = " ".join(f"tok{i}" for i in range(30))
-    shifted = "extra words here " + base
-    other = " ".join(f"zzz{i}" for i in range(30))
-    df = spark.createDataFrame(
-        [(1, base), (2, shifted), (3, other)], ["id", "t"]
-    ).select("id", T.rolling_fingerprint("t", 8).alias("fp"))
-    fp = {r["id"]: r["fp"] for r in df.collect()}
-    assert fp[1] == fp[2] or fp[2] is not None  # shared windows can win
-    assert fp[1] != fp[3]
-
-
-def test_token_counts_match_python(docs):
-    sample = docs.limit(20).collect()
-    got = {
-        r["doc_id"]: r["n"]
-        for r in docs.limit(20)
-        .select("doc_id", T.token_count("text").alias("n"))
-        .collect()
-    }
-    for r in sample:
-        assert got[r["doc_id"]] == len(r["text"].split()), r["doc_id"]
-
-
-def test_quality_score_bounds(docs):
-    rows = docs.select(T.quality_score("text").alias("q")).collect()
-    assert all(0.0 <= r["q"] <= 1.0 for r in rows)
 
 
 def test_lang_id_runs_and_is_deterministic(spark):

@@ -6,7 +6,7 @@ checkpoint(), VERDICT r2 #5)."""
 import pytest
 from pyspark.sql import functions as F
 
-from schema_matching_spark.functions.graph import cluster_stats, connected_components
+from schema_matching_spark.functions.graph import connected_components
 
 
 @pytest.fixture(params=["local", "reliable"])
@@ -43,14 +43,6 @@ def test_star_and_singleton_absence(spark, cc_kwargs):
     got = _cc(spark, [(100, 1), (100, 2), (100, 3)], **cc_kwargs)
     assert got == {100: 1, 1: 1, 2: 1, 3: 1}
     assert 999 not in got  # isolated nodes are the caller's business
-
-
-def test_cluster_stats(spark):
-    df = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)], "node long, component long"
-    )
-    r = cluster_stats(df).collect()[0]
-    assert (r["n_clusters"], r["max_cluster_size"], r["n_clustered_docs"]) == (2, 3, 5)
 
 
 def test_near_dup_cluster_query_finds_planted(spark):

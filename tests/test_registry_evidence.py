@@ -1,32 +1,17 @@
 """Evidence-gap guard (VERDICT r2 #2/#8).
 
-Two rules this file enforces forever:
-
-1. ``approx_distinct`` — the one query that had neither an oracle nor a
-   local value test — gets a tolerance test: the HLL estimate must sit
-   within 3×rsd of the exact count per group (rsd=0.02 in the query).
-2. Every ``queries()`` entry must either have a same-named
-   ``oracle_sql()`` entry or be on the explicit rows-only allowlist
-   below, where each member names the local value test that covers it.
-   Adding a new query without evidence fails this test.
+Every ``queries()`` entry must either have a same-named
+``oracle_sql()`` entry or be on the explicit rows-only allowlist below,
+where each member names the local value test that covers it.  Adding a
+new query without evidence fails this test.
 """
 
-import os
-
 from schema_matching_spark.queries import registry
-from tests.conftest import SF_DIR
 
-# sf0.01 gives each group thousands of distinct orderkeys — enough that
-# the HLL estimate is meaningful, small enough for a test.
-_TOLERANCE_SF_DIR = os.environ.get(
-    "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01"
-)
-
-# Rows-only queries (no DuckDB oracle BY DESIGN — xxhash64/LSH/HLL/
+# Rows-only queries (no DuckDB oracle BY DESIGN — xxhash64/LSH/
 # stateful values are engine-specific) and the named local value test
 # that provides their correctness evidence instead.
 ROWS_ONLY_WITH_LOCAL_TEST = {
-    "approx_distinct": "tests/test_registry_evidence.py::test_approx_distinct_tolerance",
     # table_changes_source: gained an exact DuckDB oracle in r5 (shares
     # cdc_changelog's LWW-diff SQL — the connector must reproduce
     # changes_between bit-for-bit); no longer rows-only.
@@ -79,18 +64,3 @@ def test_every_query_has_evidence():
     }
     assert not stale, f"stale rows-only allowlist entries: {sorted(stale)}"
 
-
-def test_approx_distinct_tolerance(spark):
-    from schema_matching_spark.queries.relational import q_approx_distinct
-
-    rows = q_approx_distinct(spark, _TOLERANCE_SF_DIR).collect()
-    assert rows, "approx_distinct returned no groups"
-    for r in rows:
-        exact, approx = r["exact_orders"], r["approx_orders"]
-        assert exact > 0
-        rel_err = abs(approx - exact) / exact
-        # rsd=0.02 in the query; 3 sigma bound
-        assert rel_err <= 0.06, (
-            f"group {r['l_returnflag']}: approx={approx} exact={exact} "
-            f"rel_err={rel_err:.4f} > 0.06"
-        )
