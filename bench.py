@@ -1,31 +1,30 @@
 #!/usr/bin/env python
-"""Bench harness (driver contract + SURVEY.md §7.1 step 8).
+"""CDC bench harness (driver contract + SURVEY.md §7.1 step 8).
 
-Runs the flagship CDC legs on local[$SPARK_GRAFT_CPUS] — full-log
-replay (deterministic generated log → dedup → salted collapse →
-exactly-once merge → final-state hash verification), skewed replay,
-COW/MOR incremental merges, scan pruning and bloom point lookups —
-then the three ``HEADLINE`` data-prep/similarity queries (all in
-``queries/registry.LEAD``) at ``--sf-dir`` ($SPARK_GRAFT_SF_DIR).
+Runs the flagship CDC legs on local[$SPARK_GRAFT_CPUS]: full-log replay
+(deterministic generated log → dedup → salted collapse → exactly-once
+merge → final-state hash verification), skewed replay, COW/MOR
+incremental merges (both verified against the oracle), scan pruning
+and bloom point lookups.  Every timed leg is best-of-N; the headline
+``value`` is the sum of the named ``legs`` (best secs per leg), so a
+change to the set of legs shows in the line itself.
 
-Output contract (VERDICT r4 item 1): the FULL self-describing capture
-(probe ledger, per-rep times, re-warm events) is written to
-BENCH/bench_full_<ts>_<pid>.json (+ BENCH/bench_last_full.json), and
-stdout's LAST line is a COMPACT headline JSON — metric, total, per-query
-secs, cdc replay/skew/incremental events-per-sec with verified flags,
-pruning ratios, one-line probe summary — hard-capped at
-COMPACT_MAX_CHARS so the driver's bounded stdout tail can never
-truncate it again (enforced by tests/test_bench_output.py):
+Output contract (VERDICT r4 item 1): the FULL capture (per-rep times,
+per-leg detail) is written to BENCH/bench_full_<ts>_<pid>.json
+(+ BENCH/bench_last_full.json), and stdout's LAST line is a COMPACT
+headline JSON — hard-capped at COMPACT_MAX_CHARS so the driver's
+bounded stdout tail can never truncate it (enforced by
+tests/test_bench_output.py):
 
-  {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
+  {"metric": "cdc_legs_total", "value": <sum of legs>, "unit": "sec",
+   "legs": {name: sec, ...},
    "cdc_replay": {"events": N, "replay_sec": s,
                   "events_per_sec": r, "verified": true}, ...}
 
-Flags: --cpus N (default host_cpus()), --events N, --cdc-only, --sf-dir.
+Flags: --cpus N (default host_cpus()), --events N.
 
-The leg helpers (scratch_root, host_cpus, maybe_rewarm, best_of,
-fresh_tables, warm_up) are shared by the scripts/ bench legs.
+The leg helpers (scratch_root, host_cpus, best_of, fresh_tables,
+warm_up) are shared by the scripts/ bench legs.
 """
 
 from __future__ import annotations
@@ -40,13 +39,6 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "corpus_curation",
-    "minhash_lsh_dedup",
-    "knn_brute",
-]
-
 
 def _scratch_base() -> str | None:
     """Prefer tmpfs for bench scratch — this sandbox's disk-backed /tmp
@@ -71,47 +63,15 @@ def host_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
-#: re-warm ledger — every probe/prewarm taken between timed sections,
-#: embedded in the output JSON so the capture is self-describing.
-REWARM_EVENTS: list[dict] = []
-
-
-def maybe_rewarm(tag: str, gib: float = 12.0) -> None:
-    """UNTIMED page-pool re-warm between timed sections/reps.
-
-    The hypervisor reclaims the guest's free page pool continuously
-    (BENCH/APPENDIX.md r4): one prewarm at session start decays within
-    minutes, so each allocation-heavy timed section would otherwise pay
-    provisioning at 0.01-0.3 GB/s inline.  A quick first-touch probe
-    (~1 s) gates a 32-way parallel re-warm; both are recorded in
-    REWARM_EVENTS.  This measures the ENGINE's steady-state cost — the
-    number a normally-provisioned cluster would see — rather than the
-    sandbox hypervisor's page-reclaim behavior; the probe ledger in the
-    JSON keeps the capture honest about when re-warms happened."""
-    from schema_matching_spark.functions.hostprobe import (
-        first_touch_gbs,
-        prewarm_pages,
-    )
-
-    ft = first_touch_gbs(mib=128, budget_sec=1.0)
-    ev: dict = {"tag": tag, "first_touch_gbs": round(ft, 2)}
-    if ft < 2.0:
-        ev["prewarm"] = prewarm_pages(gib=gib, budget_sec=90.0)
-    REWARM_EVENTS.append(ev)
-
-
-def best_of(reps: int, fn, rewarm: str | None = None, setup=None):
+def best_of(reps: int, fn, setup=None):
     """Time ``reps`` sequential calls of ``fn()``; returns (best secs,
-    per-rep secs, the last call's result).  Before each rep, untimed:
-    ``setup(rep)``, then ``maybe_rewarm(f"{rewarm}{rep}")`` when a tag
-    is given.  The best rep is the least host-contaminated observation
-    (BENCH/BASELINE.md "sandbox pathology")."""
+    per-rep secs, the last call's result).  ``setup(rep)`` runs untimed
+    before each rep.  The best rep is the least host-contaminated
+    observation (BENCH/BASELINE.md "sandbox pathology")."""
     secs, result = [], None
     for rep in range(reps):
         if setup is not None:
             setup(rep)
-        if rewarm is not None:
-            maybe_rewarm(f"{rewarm}{rep}")
         t0 = time.time()
         result = fn()
         secs.append(time.time() - t0)
@@ -158,7 +118,7 @@ def bench_replay(spark, n_events: int, hot_pct: int = 0, reps: int = 3,
                  warmup: bool = True, n_buckets: int = 128,
                  partitions: int = 64):
     """Flagship replay leg: materialize the WAL untimed, time best-of-
-    ``reps`` full replays into fresh tables (re-warm before each rep),
+    ``reps`` full replays into fresh tables,
     then verify the final state's content hash against the oracle.
     ``hot_pct`` plants one hot conversation owning that share of ALL
     events — the skew case the salted collapse exists for."""
@@ -181,9 +141,7 @@ def bench_replay(spark, n_events: int, hot_pct: int = 0, reps: int = 3,
 
         tables, fresh = fresh_tables(spark, root, n_buckets=n_buckets)
         best, secs, _ = best_of(
-            reps, lambda: replay(tables[-1], log),
-            rewarm="cdc_skew_rep" if hot_pct else "cdc_replay_rep",
-            setup=fresh,
+            reps, lambda: replay(tables[-1], log), setup=fresh
         )
         t1 = time.time()
         verified = (content_hash(tables[-1].read())
@@ -204,52 +162,70 @@ def bench_cdc_incremental(
     batch_events: int = 200_000, n_buckets: int = 32, partitions: int = 64,
     mode: str = "cow",
 ):
-    """Micro-batch ingest shape: bootstrap a table, then time N
-    incremental merge_apply batches.  mode='cow' rewrites affected
-    buckets per batch; mode='mor' appends winner deltas (O(batch))."""
+    """Micro-batch ingest shape: bootstrap a table (untimed), then time
+    N incremental merge_apply batches best-of-3.  mode='cow' rewrites
+    affected buckets per batch; mode='mor' appends winner deltas
+    (O(batch)).  Each rep first rolls the table back to the bootstrap
+    snapshot — a metadata-only pointer move that also rolls back the
+    batch ledger, so every rep re-applies the same ``inc-{b}`` batches
+    from the same state.  The final state is then verified against the
+    oracle over bootstrap ∪ batches (``changes()`` is lsn-deterministic,
+    so the same calls rebuild the log)."""
+    from functools import reduce
+
     from schema_matching_spark.operators.apply import apply_batch
+    from schema_matching_spark.operators.verify import content_hash
     from schema_matching_spark.plans.table import SnapshotTable
-    from schema_matching_spark.sources.generator import changes
+    from schema_matching_spark.sources.generator import changes, expected_state
 
     with scratch_root("bench_inc_") as root:
         n_conv = max(base_events // 200, 100)
         table = SnapshotTable(
             spark, os.path.join(root, "tbl"), n_buckets=n_buckets, mode=mode
         )
-        apply_batch(
-            table,
-            changes(spark, base_events, n_conv=n_conv, turns_per_conv=50,
-                    partitions=partitions),
-            "bootstrap",
-        )
+        base = changes(spark, base_events, n_conv=n_conv, turns_per_conv=50,
+                       partitions=partitions)
+        apply_batch(table, base, "bootstrap")
         v_base = table.current_version()
-        # the 5-batch COW loop rewrites ~2 GB of bucket files per batch
-        # — the heaviest fresh-page section of the whole bench
-        maybe_rewarm(f"cdc_incremental_{mode}", gib=16.0)
-        t0 = time.time()
-        for b in range(n_batches):
-            batch = changes(
+        batches = [
+            changes(
                 spark, batch_events, n_conv=n_conv, turns_per_conv=50,
                 lsn_start=base_events + b * batch_events, partitions=16,
             )
-            apply_batch(table, batch, f"inc-{b}")
-        inc_sec = time.time() - t0
+            for b in range(n_batches)
+        ]
+
+        def loop() -> None:
+            for b, batch in enumerate(batches):
+                apply_batch(table, batch, f"inc-{b}")
+
+        best, secs, _ = best_of(
+            3, loop, setup=lambda _rep: table.rollback(v_base)
+        )
         total = n_batches * batch_events
         # changelog scan (round 3): read the net change feed the N
         # incremental batches produced — the downstream-consumer path
         t1 = time.time()
         n_changes = table.changes_between(v_base).count()
         changelog_sec = time.time() - t1
+        t2 = time.time()
+        log = reduce(lambda a, b: a.unionByName(b), batches, base)
+        verified = (content_hash(table.read())
+                    == content_hash(expected_state(log)))
         return {
             "mode": mode,
             "base_events": base_events,
             "batches": n_batches,
             "batch_events": batch_events,
-            "incremental_sec": round(inc_sec, 3),
-            "incremental_events_per_sec": round(total / inc_sec, 1),
+            "incremental_sec": round(best, 3),
+            "incremental_reps_sec": [round(r, 3) for r in secs],
+            "incremental_events_per_sec": round(total / best, 1),
             "changelog_scan_sec": round(changelog_sec, 3),
             "changelog_changes_emitted": n_changes,
+            "base_version": v_base,
             "final_version": table.current_version(),
+            "verify_sec": round(time.time() - t2, 3),
+            "verified": bool(verified),
         }
 
 
@@ -292,17 +268,12 @@ def bench_scan_pruning(
         # win is modest (page cache hides the skipped I/O); files_read /
         # files_total is the scale-relevant number (skipped files are
         # skipped GETs on object storage).
-        full_sec = scan_sec = None
-        n_full = n_scan = 0
-        for _ in range(2):
-            t0 = time.time()
-            n_full = table.read().where(F.col("ts") >= F.lit(lo)).count()
-            el = time.time() - t0
-            full_sec = el if full_sec is None else min(full_sec, el)
-            t1 = time.time()
-            n_scan = table.scan(ts_min=lo).count()
-            el = time.time() - t1
-            scan_sec = el if scan_sec is None else min(scan_sec, el)
+        full_sec, _, n_full = best_of(
+            2, lambda: table.read().where(F.col("ts") >= F.lit(lo)).count()
+        )
+        scan_sec, _, n_scan = best_of(
+            2, lambda: table.scan(ts_min=lo).count()
+        )
         stats = table.last_scan_stats
         assert n_scan == n_full, (n_scan, n_full)
         return {
@@ -394,25 +365,10 @@ COMPACT_MAX_CHARS = 1800
 
 def compact_headline(out: dict, detail_path: str | None) -> str:
     """Render the driver-facing one-line JSON: every headline number
-    (per-query secs, cdc replay/skew/incremental events-per-sec with
-    verified flags, pruning ratios) plus a one-line probe-health
-    summary; the full self-describing capture lives in ``detail_path``.
+    (per-leg secs, cdc replay/skew/incremental events-per-sec with
+    verified flags, pruning ratios); the full capture lives in
+    ``detail_path``.
     """
-    hp = out.get("host_probes") or {}
-    pre = hp.get("pre") or {}
-    rewarms = hp.get("rewarm_events") or []
-    rewarm_gbs = [
-        e["prewarm"]["gbs"]
-        for e in rewarms
-        if isinstance(e.get("prewarm"), dict) and "gbs" in e["prewarm"]
-    ]
-    probe_summary = {
-        "pre_healthy": pre.get("healthy"),
-        "pre_first_touch_gbs": pre.get("first_touch_gbs"),
-        "rewarms": len(rewarms),
-        "min_rewarm_gbs": round(min(rewarm_gbs), 2) if rewarm_gbs else None,
-        "post_first_touch_gbs": (hp.get("post") or {}).get("first_touch_gbs"),
-    }
     cdc = out.get("cdc") or {}
     skew = out.get("cdc_skewed") or {}
     inc = out.get("cdc_incremental") or {}
@@ -424,8 +380,7 @@ def compact_headline(out: dict, detail_path: str | None) -> str:
         "value": out["value"],
         "unit": out["unit"],
         "engine": out.get("engine"),
-        "sf": out["sf"],
-        "queries": out["queries"],
+        "legs": out["legs"],
         "cdc_replay": {
             "events": cdc.get("events"),
             "replay_sec": cdc.get("replay_sec"),
@@ -436,12 +391,14 @@ def compact_headline(out: dict, detail_path: str | None) -> str:
             "events_per_sec": skew.get("events_per_sec"),
             "verified": skew.get("verified"),
         },
-        "cdc_incremental_cow_events_per_sec": inc.get(
-            "incremental_events_per_sec"
-        ),
-        "cdc_incremental_mor_events_per_sec": mor.get(
-            "incremental_events_per_sec"
-        ),
+        "cdc_incremental_cow": {
+            "events_per_sec": inc.get("incremental_events_per_sec"),
+            "verified": inc.get("verified"),
+        },
+        "cdc_incremental_mor": {
+            "events_per_sec": mor.get("incremental_events_per_sec"),
+            "verified": mor.get("verified"),
+        },
         "scan_pruning": {
             "files_read": scan.get("files_read"),
             "files_total": scan.get("files_total"),
@@ -452,20 +409,18 @@ def compact_headline(out: dict, detail_path: str | None) -> str:
             "files_in_bucket": lk.get("files_in_bucket"),
             "speedup": lk.get("speedup"),
         },
-        "probes": probe_summary,
         "detail_file": detail_path,
     }
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) > COMPACT_MAX_CHARS:  # never re-truncate at the driver
         compact.pop("detail_file", None)
-        compact["probes"] = {"pre_healthy": pre.get("healthy")}
         line = json.dumps(compact, separators=(",", ":"))
     return line
 
 
 def write_full_capture(out: dict) -> str | None:
-    """Persist the full self-describing capture (probe ledger, per-rep
-    times, re-warm events) under BENCH/ and return its path."""
+    """Persist the full capture (per-rep times, per-leg detail) under
+    BENCH/ and return its path."""
     try:
         here = os.path.dirname(os.path.abspath(__file__))
         bench_dir = os.path.join(here, "BENCH")
@@ -493,34 +448,10 @@ def main() -> None:
         "--events", type=int,
         default=int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "10000000")),
     )
-    ap.add_argument("--cdc-only", action="store_true")
-    ap.add_argument(
-        "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    )
     args = ap.parse_args()
 
-    from schema_matching_spark.functions.hostprobe import (
-        host_probes,
-        prewarm_pages,
-    )
+    from schema_matching_spark import REPLAY_ENGINE
     from schema_matching_spark.session import get_spark
-
-    # Host-health probes BEFORE the JVM starts and again after all
-    # benches: the capture carries its own evidence, so a degraded
-    # BENCH_rN is distinguishable from a code regression without
-    # forensic work (VERDICT r3 item 1).  CPU-healthy + low first-touch
-    # GB/s = hypervisor memory-reclaim regime, not the engine.
-    probes_pre = host_probes()
-    print(f"[host] pre-bench probes: {json.dumps(probes_pre)}",
-          file=sys.stderr, flush=True)
-    prewarm = None
-    if not probes_pre["healthy"] and probes_pre["steal_pct"] < 10.0:
-        # Reclaim regime: force page provisioning OUTSIDE the timed
-        # sections (32-way parallel touch aggregates ~0.84 GB/s where
-        # single-threaded faults crawl at 0.01 — BENCH/APPENDIX.md r4).
-        prewarm = prewarm_pages(gib=12.0)
-        print(f"[host] prewarm: {json.dumps(prewarm)}",
-              file=sys.stderr, flush=True)
 
     cpus = args.cpus
     extra = {}
@@ -532,17 +463,12 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # CDC-incremental FIRST (VERDICT r4 item 5): these are single timed
-    # 5-batch loops — the section most vulnerable to the host's
-    # mid-bench page-reclaim collapse — so they run immediately after
-    # the healthy pre-probe/prewarm, before anything else dirties the
-    # page pool.  The bootstrap build doubles as the JIT warm-up.
-    timings: dict[str, float] = {}
+    # The incrementals' untimed bootstrap builds double as the JIT
+    # warm-up.  Their rep 0 still read ~1.8x the best rep for COW on a
+    # 4-core host (BENCH/bench_4core_baseline.json); best-of-3 keeps
+    # that out of the leg.
     inc = bench_cdc_incremental(spark, mode="cow")
     inc_mor = bench_cdc_incremental(spark, mode="mor")
-    # Flagship replay next (warm-up + best-of-3 with per-rep re-warm
-    # gates — self-protecting against regime decay in a way the
-    # incrementals are not).
     partitions = max(cpus * 2, 16)
     cdc = bench_replay(spark, args.events, partitions=partitions)
     # skew evidence (north rule: hot-key skew handled EXPLICITLY): the
@@ -557,56 +483,26 @@ def main() -> None:
                             warmup=False, partitions=partitions)
     scan_prune = bench_scan_pruning(spark)
     point_lookup = bench_point_lookup(spark)
-    timings["cdc_incremental_cow"] = inc["incremental_sec"]
-    timings["cdc_incremental_mor"] = inc_mor["incremental_sec"]
-    timings["scan_pruned_window"] = scan_prune["scan_sec"]
-    timings["point_lookup"] = point_lookup["lookup_bloom_sec"]
-
-    if not args.cdc_only:
-        import __spark_entry__ as E
-
-        queries = E.queries()
-        # best-of-2 per query, same protocol rationale as the CDC
-        # best-of-3: rep 0 pays whole-stage-codegen JIT compilation
-        # (measured ~2x on every headline query) and host-noise spikes;
-        # the best rep is the engine's steady-state number, which is
-        # what a 100 TB run amortizes to.
-        maybe_rewarm("headline_queries")
-        for name in HEADLINE:
-            best, _, _ = best_of(
-                2, lambda: queries[name](spark, args.sf_dir).collect()
-            )
-            timings[name] = round(best, 3)
-
-    timings["cdc_replay"] = cdc["replay_sec"]
-    timings["cdc_replay_skewed"] = cdc_skew["replay_sec"]
-
-    sf = args.sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf = float(sf)
-    except ValueError:
-        sf = args.sf_dir
-    from schema_matching_spark import REPLAY_ENGINE
-
+    legs = {
+        "cdc_incremental_cow": inc["incremental_sec"],
+        "cdc_incremental_mor": inc_mor["incremental_sec"],
+        "scan_pruned_window": scan_prune["scan_sec"],
+        "point_lookup": point_lookup["lookup_bloom_sec"],
+        "cdc_replay": cdc["replay_sec"],
+        "cdc_replay_skewed": cdc_skew["replay_sec"],
+    }
     out = {
-        "metric": "headline_queries_plus_cdc_replay_total",
-        "value": round(sum(timings.values()), 3),
+        "metric": "cdc_legs_total",
+        "value": round(sum(legs.values()), 3),
         "unit": "sec",
         "engine": REPLAY_ENGINE,
-        "queries": timings,
-        "sf": sf,
+        "legs": legs,
         "cdc": cdc,
         "cdc_skewed": cdc_skew,
         "cdc_incremental": inc,
         "cdc_incremental_mor": inc_mor,
         "scan_pruning": scan_prune,
         "point_lookup": point_lookup,
-        "host_probes": {
-            "pre": probes_pre,
-            "prewarm": prewarm,
-            "rewarm_events": REWARM_EVENTS,
-            "post": host_probes(fast=True),
-        },
     }
     # Full capture → BENCH/ file; stdout gets ONLY the compact headline
     # as the LAST line (the driver keeps a bounded tail of stdout — the

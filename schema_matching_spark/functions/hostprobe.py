@@ -1,55 +1,18 @@
-"""Spark-free host-health probes (CLAUDE.md triage order).
+"""Spark-free host-context probes for bench captures.
 
-The sandbox host has a documented failure regime: the hypervisor
-periodically reclaims the page cache, pinning buff/cache near ~1 GB and
-dropping anonymous-page first-touch bandwidth to <1 GB/s while CPU
-throughput stays healthy.  In that regime every allocation-heavy Spark
-stage (shuffle writes, fresh executor pages) runs 2-6x slow with zero
-code change (VERDICT r3, BENCH/APPENDIX.md).
+Two cheap readings (no Spark/JVM, ~1 s) that ``perfbench/run.py``
+records as its ``host.*`` context metrics, so a slow run can be told
+apart from a code regression:
 
-``host_probes()`` returns a small JSON-able dict so a bench capture can
-carry its own health evidence: a degraded BENCH_rN is then
-distinguishable from a code regression without forensic work.
-
-Probes (cheap, ~5 s total, no Spark/JVM):
-  * sha_hps      — 32-way sustained multiprocessing sha256 (CPU health;
-                   healthy box ~20-25 GB/s equivalent, i.e. >2.5e6 h/s).
-  * steal_pct    — /proc/stat steal ticks over a 0.5 s window.
+  * steal_pct       — /proc/stat steal ticks over a short window.
   * first_touch_gbs — anon first-touch bandwidth: allocate a fresh
-                   512 MiB numpy buffer and write one byte per 4 KiB
-                   page (forces demand-zero faults).  Healthy ≥ 3 GB/s;
-                   the pathological regime measures 0.9-1.5 GB/s.
-  * buff_cache_gb — current page-cache size (pathology fingerprint:
-                   pinned ~1 GB on a 128 GiB box).
-  * healthy      — heuristic roll-up used by bench.py's output.
+                      numpy buffer and write one byte per 4 KiB page
+                      (forces demand-zero faults), time-bounded.
 """
 
 from __future__ import annotations
 
 import time
-
-
-def _sha_burn(n: int) -> int:
-    import hashlib
-
-    x = b"x" * 64
-    for _ in range(n):
-        x = hashlib.sha256(x).digest()
-    return x[0]
-
-
-def sha_throughput(procs: int = 32, per: int = 400_000, reps: int = 2) -> float:
-    """Best sustained hashes/sec at ``procs`` worker processes."""
-    import multiprocessing as mp
-
-    best = 0.0
-    with mp.Pool(procs) as pool:
-        pool.map(_sha_burn, [per // 10] * procs)  # warm: spawn cost out
-        for _ in range(reps):
-            t0 = time.time()
-            pool.map(_sha_burn, [per] * procs)
-            best = max(best, procs * per / (time.time() - t0))
-    return best
 
 
 def steal_pct(window_sec: float = 0.5) -> float:
@@ -105,94 +68,3 @@ def first_touch_gbs(mib: int = 512, budget_sec: float = 2.0) -> float:
     el = time.time() - t0
     del buf
     return (touched / el) / 1e9 if el > 0 else float("inf")
-
-
-def buff_cache_gb() -> float:
-    vals = {}
-    with open("/proc/meminfo") as fh:
-        for line in fh:
-            k, v = line.split(":", 1)
-            vals[k] = int(v.split()[0])  # kB
-    return (vals.get("Buffers", 0) + vals.get("Cached", 0)) / 1e6
-
-
-def host_probes(fast: bool = False) -> dict:
-    """Run the CLAUDE.md triage probes; ~6 s worst-case
-    (fast=True skips the sha pool)."""
-    ft = max(first_touch_gbs() for _ in range(2))
-    out = {
-        "first_touch_gbs": round(ft, 2),
-        "steal_pct": round(steal_pct(), 2),
-        "buff_cache_gb": round(buff_cache_gb(), 2),
-    }
-    if not fast:
-        out["sha_hps_32"] = round(sha_throughput(), 0)
-    # Healthy = CPU fine AND memory provisioning fine.  Thresholds from
-    # BENCH/APPENDIX.md: pathological runs measured 0.9-1.5 GB/s
-    # first-touch with buff/cache pinned ~1 GB; healthy runs ≥3 GB/s.
-    out["healthy"] = bool(
-        ft >= 2.0
-        and out["steal_pct"] < 10.0
-        and out.get("sha_hps_32", 3e6) > 1.5e6
-    )
-    return out
-
-
-def _touch_mib(mib: int) -> int:
-    try:
-        import numpy as np
-
-        buf = np.empty(mib * 1024 * 1024, dtype=np.uint8)
-        buf[::4096] = 1
-    except ImportError:  # pragma: no cover
-        buf = bytearray(mib * 1024 * 1024)
-        for off in range(0, len(buf), 4096):
-            buf[off] = 1
-    return 0
-
-
-def prewarm_pages(gib: float = 8.0, procs: int = 32,
-                  budget_sec: float = 120.0) -> dict:
-    """Force the hypervisor to provision ``gib`` GiB of guest pages NOW
-    (32-way parallel first-touch), so a following bench's timed
-    sections fault warm pages instead of paying provisioning inline.
-
-    Measured r4 (BENCH/APPENDIX.md): single-threaded provisioning runs
-    at 0.005-0.01 GB/s in the reclaim regime but parallel touch
-    aggregates ~0.84 GB/s, and pages provisioned to the guest stay
-    cheap until the hypervisor re-reclaims them.  The touched buffers
-    are freed on return — what persists is the guest's provisioned
-    page pool, which the JVM/tmpfs then draw from.  Bounded by
-    ``budget_sec`` so a fully-degraded host can't stall the bench
-    indefinitely; returns {gib_touched, sec, gbs}."""
-    import multiprocessing as mp
-
-    per_mib = max(int(gib * 1024 / procs), 16)
-    t0 = time.time()
-    touched = 0
-    with mp.Pool(procs) as pool:
-        # one wave per budget check: procs x per_mib/4 chunks
-        chunk = max(per_mib // 4, 16)
-        waves = max(per_mib // chunk, 1)
-        for _ in range(waves):
-            pool.map(_touch_mib, [chunk] * procs)
-            touched += chunk * procs
-            if time.time() - t0 > budget_sec:
-                break
-    el = time.time() - t0
-    return {
-        "gib_touched": round(touched / 1024, 2),
-        "sec": round(el, 2),
-        "gbs": round(touched * 1024 * 1024 / el / 1e9, 2) if el else None,
-    }
-
-
-if __name__ == "__main__":  # pragma: no cover
-    import json
-    import sys
-
-    if len(sys.argv) > 1 and sys.argv[1] == "prewarm":
-        gib = float(sys.argv[2]) if len(sys.argv) > 2 else 8.0
-        print(json.dumps(prewarm_pages(gib)))
-    else:
-        print(json.dumps(host_probes()))

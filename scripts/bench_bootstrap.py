@@ -8,7 +8,7 @@ a source snapshot at a fenced WAL position pays O(table) + O(tail) —
 at the north metric's 10^10-event histories that is the difference
 between days and minutes.
 
-Protocol (same warm-up/best-of-N/rewarm rules as bench.py): for each
+Protocol (same warm-up/best-of-N rules as bench.py): for each
 history size H with a FIXED 500k-event tail,
 
   path A  timed replay of all H events into a fresh table;
@@ -34,13 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import (  # noqa: E402
-    REWARM_EVENTS,
-    host_cpus,
-    maybe_rewarm,
-    scratch_root,
-    warm_up,
-)
+from bench import host_cpus, scratch_root, warm_up  # noqa: E402
 
 TAIL = 500_000
 OVERLAP = 100_000
@@ -76,7 +70,6 @@ def run_one(spark, n_events: int, n_buckets: int, partitions: int) -> dict:
         replay_best, boot_best = None, None
         hash_a = hash_b = None
         for rep in range(2):
-            maybe_rewarm(f"boot_{n_events}_rep{rep}")
             ta = SnapshotTable(
                 spark, os.path.join(root, f"a{rep}"), n_buckets=n_buckets
             )
@@ -85,7 +78,6 @@ def run_one(spark, n_events: int, n_buckets: int, partitions: int) -> dict:
             el = time.time() - t0
             replay_best = el if replay_best is None else min(replay_best, el)
 
-            maybe_rewarm(f"boot_{n_events}_rep{rep}b")
             tb = SnapshotTable(
                 spark, os.path.join(root, f"b{rep}"), n_buckets=n_buckets
             )
@@ -123,7 +115,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    maybe_rewarm("session_start")
     warm_up(spark)
 
     out = {
@@ -133,7 +124,6 @@ def main() -> None:
             run_one(spark, int(h), n_buckets=128, partitions=64)
             for h in args.histories.split(",")
         ],
-        "rewarm_events": REWARM_EVENTS,
     }
     print(json.dumps(out))
     spark.stop()

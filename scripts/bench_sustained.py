@@ -20,7 +20,7 @@ against the chunk-folded engine-independent oracle
 so peak storage stays bounded.
 
 Timed: merge_apply + maintenance ticks.  Untimed: generation, oracle
-folding, page re-warms, the final verify.  Sustained ev/s =
+folding, the final verify.  Sustained ev/s =
 events / (apply_sec + maintenance_sec).
 
 Appends one line to BENCH/headline_runs.jsonl and prints it last.
@@ -38,13 +38,7 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
-from bench import (  # noqa: E402
-    REWARM_EVENTS,
-    host_cpus,
-    maybe_rewarm,
-    scratch_root,
-    warm_up,
-)
+from bench import host_cpus, scratch_root, warm_up  # noqa: E402
 
 SHM = "/dev/shm"
 
@@ -101,11 +95,7 @@ def main() -> None:
         " -XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64",
     )
 
-    from schema_matching_spark.functions.hostprobe import host_probes
     from schema_matching_spark.session import get_spark
-
-    pre = host_probes()
-    print("pre-probes:", json.dumps(pre), flush=True)
 
     with scratch_root("sustained_") as root:
         # a pid-unique subdirectory: cleanup removes only what this run
@@ -128,16 +118,15 @@ def main() -> None:
         )
         spark.sparkContext.setLogLevel("ERROR")
         try:
-            run(spark, args, root, oracle_root, pre)
+            run(spark, args, root, oracle_root)
         finally:
             spark.stop()
             shutil.rmtree(oracle_root, ignore_errors=True)
 
 
-def run(spark, args, root: str, oracle_root: str, pre: dict) -> None:
+def run(spark, args, root: str, oracle_root: str) -> None:
     """The timed chunk loop and final verify; appends the ledger row."""
     from schema_matching_spark import REPLAY_ENGINE
-    from schema_matching_spark.functions.hostprobe import host_probes
     from schema_matching_spark.operators.apply import apply_batch
     from schema_matching_spark.operators.verify import content_hash
     from schema_matching_spark.plans.table import SnapshotTable
@@ -166,7 +155,6 @@ def run(spark, args, root: str, oracle_root: str, pre: dict) -> None:
             partitions=max(args.gen_partitions // args.chunks, 32),
         ).write.parquet(chunk_dir)
         gen_sec += time.time() - t0
-        maybe_rewarm(f"sustained_chunk{i}")
         chunk = spark.read.parquet(chunk_dir)
 
         t0 = time.time()
@@ -229,7 +217,6 @@ def run(spark, args, root: str, oracle_root: str, pre: dict) -> None:
     verify_sec = time.time() - t0
 
     total_sec = apply_sec + maint_sec
-    post = host_probes()
     entry = {
         "run": args.tag,
         "engine": REPLAY_ENGINE,
@@ -254,11 +241,6 @@ def run(spark, args, root: str, oracle_root: str, pre: dict) -> None:
         "driver_mem": args.driver_mem,
         "gen_sec": round(gen_sec, 1),
         "chunk_ledger": ledger,
-        "regime": {
-            "pre_first_touch_gbs": pre["first_touch_gbs"],
-            "post_first_touch_gbs": post["first_touch_gbs"],
-        },
-        "rewarm_events": REWARM_EVENTS,
     }
     with open(os.path.join(HERE, "BENCH", "headline_runs.jsonl"), "a") as f:
         f.write(json.dumps(entry) + "\n")

@@ -18,14 +18,7 @@ import sys
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
-from bench import (  # noqa: E402
-    REWARM_EVENTS,
-    best_of,
-    fresh_tables,
-    host_cpus,
-    maybe_rewarm,
-    scratch_root,
-)
+from bench import best_of, fresh_tables, host_cpus, scratch_root  # noqa: E402
 
 EVENTS = int(os.environ.get("PROFILE_EVENTS", "4000000"))
 REPS = int(os.environ.get("PROFILE_REPS", "3"))
@@ -37,9 +30,7 @@ def main() -> None:
     from schema_matching_spark.session import get_spark
     from schema_matching_spark.sources.generator import changes
 
-    maybe_rewarm("session_start")
-    out: dict = {"events": EVENTS,
-                 "first_touch_gbs": REWARM_EVENTS[-1]["first_touch_gbs"]}
+    out: dict = {"events": EVENTS}
     with scratch_root("profrep_") as scratch:
         spark = get_spark(
             "profile_replay", master=f"local[{host_cpus()}]",
