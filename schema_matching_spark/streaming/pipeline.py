@@ -47,7 +47,6 @@ def start_cdc_stream(
     watermark: str = "10 minutes",
     max_files_per_trigger: int = 1,
     available_now: bool = True,
-    evolver=None,
     maintenance_every: int | None = None,
     keep_snapshots: int = 5,
     source_format: str = "parquet",
@@ -58,10 +57,6 @@ def start_cdc_stream(
     catch-up pass (processes everything currently in the WAL, then
     stops) — the shape both the tests and the bench use; pass False for
     a continuously-tailing query.
-
-    ``evolver``: optional callable ``(batch_df) -> batch_df`` inserted
-    before the collapse — the schema-evolution mapper (B7) hooks in
-    here (see operators/evolve.EvolutionAligner).
 
     ``maintenance_every``: if set, every N applied micro-batches the
     sink runs ``table.compact()`` (folds MOR deltas / small files) and
@@ -174,8 +169,6 @@ def start_cdc_stream(
                     "overwrite"
                 ).parquet(os.path.join(dlq_dir, f"batch_id={batch_id}"))
             batch_df = good.dropDuplicates(["lsn", "conv_id", "turn_idx"])
-        if evolver is not None:
-            batch_df = evolver(batch_df)
         obs = Observation()
         observed = batch_df.observe(
             obs,

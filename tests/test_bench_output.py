@@ -76,11 +76,15 @@ def _padded_out() -> dict:
             "files_read": 333,
             "files_total": 66666,
             "speedup": 377.77,
+            "scan_reps_sec": [12.345, 23.456],
+            "full_reps_sec": [1234.567, 2345.678],
         },
         "point_lookup": {
             "files_read": 111,
             "files_in_bucket": 44444,
             "speedup": 176.76,
+            "bloom_reps_sec": [12.345, 23.456],
+            "blind_reps_sec": [1234.567, 2345.678],
         },
     }
 

@@ -142,6 +142,23 @@ def test_aligner_end_to_end_with_ledger(spark, base_log, tmp_path):
     assert aligned2.columns == aligned.columns
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_aligner_call_aligns_retyped_batch(spark, base_log, tmp_path, mode):
+    """A retyped batch carries exactly the change-schema NAMES, so the
+    aligner's no-drift fast path must also compare types: a batch passed
+    through uncast would commit string ``turn_idx``/``ts`` files that
+    every later read fails on."""
+    from schema_matching_spark.queries.evolution import FIXTURES
+
+    table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4, mode=mode)
+    replay(table, base_log, batch_id="bootstrap")
+    nxt = changes(spark, 1000, n_conv=30, turns_per_conv=15, lsn_start=N)
+    aligner = EvolutionAligner(table, str(tmp_path / "ledger.json"))
+    table.merge_apply(aligner(FIXTURES["retyped"](nxt)), "b1")
+    full = base_log.unionByName(nxt)
+    assert states_equal(table.read(), expected_state(full))
+
+
 def test_streaming_drift_into_mor_table(spark, base_log, tmp_path):
     """Cross-feature: the full streaming pipeline (WAL tail + dedup +
     foreachBatch) with the evolution aligner (B7) hooked in, applying

@@ -33,11 +33,6 @@ ROWS_ONLY_WITH_LOCAL_TEST = {
     "knn_lsh": "tests/test_similarity.py (recall vs brute force)",
     "knn_ivf": "tests/test_similarity.py (recall vs brute force)",
     "embedding_dedup": "tests/test_similarity.py (planted jitter recall)",
-    "schema_evolution_mapping": "tests/test_assignment.py + tests/test_evolve.py",
-    "image_dedup": "tests/test_multimodal.py (planted upscale dups)",
-    "audio_features": "tests/test_multimodal.py (analytic DSP identities)",
-    "scene_cuts": "tests/test_multimodal.py (planted cuts found exactly)",
-    "frame_sample": "tests/test_multimodal.py (deterministic frame plumbing)",
 }
 
 
