@@ -996,6 +996,18 @@ class SnapshotTable:
         (deterministic under payload jitter — winner_order tie-break),
         one clean file set per bucket.
 
+        Width: the exchange is ``min(n_buckets, defaultParallelism)``
+        partitions — one wave of tasks, and never more partitions than
+        buckets (the rest would be empty).  Left to the default, the
+        shuffle is either AQE-coalesced by *bytes* — which judges a
+        small input cheap and folds it into ONE task, though the window
+        sort plus one parquet file per bucket is CPU-bound work
+        (``compact`` on a 4-core host ran single-threaded) — or, with no
+        AQE (streaming micro-batches), ``spark.sql.shuffle.partitions``
+        tasks in several waves.  An explicit width is still
+        HashPartitioning(_bucket), so the window's clustering, the
+        writer-sort elision and the one-task-per-bucket layout hold.
+
         Skew note: callers feed either pre-collapsed rows (stored
         buckets, ≤1/key) or winners_join output (raw hot-key event
         mass already dropped) or micro-batch-sized raw rows — in all
@@ -1009,9 +1021,10 @@ class SnapshotTable:
 
         from ..operators.salting import winner_order
 
+        width = min(self.n_buckets, self.spark.sparkContext.defaultParallelism)
         bucketed = rows.withColumn(
             "_bucket", bucket_expr(self.n_buckets)
-        ).repartition(F.col("_bucket"))
+        ).repartition(width, F.col("_bucket"))
         w = Window.partitionBy("_bucket", *KEY_COLS).orderBy(*winner_order())
         out = (
             bucketed.withColumn("_rn", F.row_number().over(w))
@@ -1045,11 +1058,12 @@ class SnapshotTable:
         by (_bucket, key) — satisfying the partitioned writer's required
         ordering AND clustering rows by key inside each file — and emits
         one file per (task, bucket).  On every path but ``overwrite`` the
-        rows arrive from ``_bucket_collapse``, already shuffled once on
-        ``_bucket``; re-shuffling full-width payloads a second time just
-        to get one-file-per-bucket was the single biggest cost of a
-        commit (measured).  More, smaller files per bucket are absorbed
-        by the manifest and merged away by compact().
+        rows arrive from ``_bucket_collapse``, hash-partitioned on
+        ``_bucket``, so each bucket lives in exactly one task and the
+        commit writes one file per touched bucket with no second
+        shuffle.  ``overwrite`` writes from its input's partitioning and
+        may leave several files per bucket; the manifest absorbs them
+        and compact() merges them away.
         """
         commit_id = uuid.uuid4().hex
         out_dir = os.path.join(self.root, "data", commit_id)

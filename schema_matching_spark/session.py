@@ -9,6 +9,15 @@ Configs chosen for the 100TB design point (SURVEY.md §4.2):
 * shuffle.partitions scaled to parallelism — on a real cluster this is
   set per-job by spark-submit; locally callers pass a width matched to
   the core count (the bench legs use bench.host_cpus()).
+* File listing stays on the driver.  The snapshot table reads exact
+  file paths its manifest names (plans/table.py ``_read_files``); past
+  Spark's default of 32 paths, ``spark.read.parquet`` would start a
+  Spark job with one task per path just to stat them — ~15 ms of task
+  deserialisation each, over a second for a 160-file compaction on 4
+  cores — for metadata the driver fetches in microseconds from a local
+  or mounted store.  The cluster entry points under ``jobs/`` build
+  their own sessions and keep Spark's parallel listing for remote
+  object stores, where per-path latency is what that job hides.
 """
 
 from __future__ import annotations
@@ -78,6 +87,12 @@ def get_spark(
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # list manifest-named paths on the driver, never in a Spark job
+        # (module docstring)
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
         # Python DataSource planning spawns a simple (non-daemon) worker
         # on the driver.  Its accept window is JVM-hardcoded at 10 s
         # (PythonWorkerFactory.createSimpleWorker) — which a saturated

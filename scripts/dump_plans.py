@@ -19,24 +19,63 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+COLLAPSE_POLICY = """\
+## Bootstrap collapse policy (probed direct vs salted)
+
+The full-log bootstrap replay has two semantically identical reduce
+strategies, and merge_apply into an empty table MEASURES the input to
+pick one (operators/salting.choose_collapse, the only selector — there
+is no user override; decision + evidence recorded in commit lineage as
+`collapse_policy`).  Both feed the same single pipeline every merge
+runs (`_bucket_collapse` → `_write_commit_files` → `_commit_merge`);
+only its input differs:
+
+- **direct** — `_bucket_collapse(raw log)`: ONE full-width Exchange on
+  `_bucket`; the bucket window sorts each bucket's raw event mass
+  (losers included) and drops non-winners.  Minimum bytes moved —
+  measured ~2× faster end-to-end on uniform transcript logs at
+  duplication ≈4 (scripts/profile_replay.py: the salted path's
+  winner-agg + join-back cost more than they save at low duplication).
+- **salted** — narrow salted max(lsn) winner search + join-back, THEN
+  `_bucket_collapse`: two exchanges, but every sorted/aggregated
+  buffer stays narrow and bounded, so no hot conversation or
+  high-update log can concentrate sort mass in one task.
+
+The probe is one narrow columnar pass (groupBy(_bucket) → count +
+approx_count_distinct(xxhash64(key)); shuffle carries n_buckets rows)
+— at any scale a tiny fraction of the full-width shuffle the decision
+can save.  Thresholds: direct only when duplication ≤16× AND
+max-bucket mass ≤4× mean.  Correctness is policy-independent:
+tests/test_collapse_policy.py forces each path by patching the probe
+(`choose_collapse`) and pins bit-identical final states for
+direct/salted/probed on both uniform and 60%-hot-key logs.  Incremental
+(non-bootstrap) merges are unaffected — their per-batch raw input is
+already bounded.
+"""
+
+
 def formatted(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     out = buf.getvalue()
-    # keep the operator tree + the scan-node details (pushdown/pruning
-    # evidence); the full per-node column listings run to hundreds of
-    # lines and drown the signal
+    # keep the operator tree, the scan-node details (pushdown/pruning
+    # evidence) and each Exchange's partitioning (its width, and whether
+    # AQE may coalesce it); the full per-node column listings run to
+    # hundreds of lines and drown the signal
     tree, _, details = out.partition("\n\n")
-    keep, in_scan = [], False
+    keep, node = [], None
     for ln in details.splitlines():
         if ln.startswith("("):
-            in_scan = "Scan" in ln
-            if in_scan:
+            node = "scan" if "Scan" in ln else "exchange" if (
+                ln.rstrip().endswith(" Exchange")) else None
+            if node:
                 keep.append(ln)
-        elif in_scan and any(
+        elif node == "scan" and any(
             k in ln for k in ("PushedFilters", "ReadSchema", "PartitionFilters")
         ):
+            keep.append(ln)
+        elif node == "exchange" and ln.startswith("Arguments:"):
             keep.append(ln)
     return tree + ("\n\n" + "\n".join(keep) if keep else "")
 
@@ -67,9 +106,18 @@ def main() -> None:
     log = changes(spark, 2000, n_conv=20, turns_per_conv=10, partitions=4)
     add(
         "_bucket_collapse (the one true commit shuffle)",
-        "repartition(_bucket) + bucket-leading window = dedup + "
-        "clustering + writer sort in ONE Exchange (pinned by "
-        "tests/test_plans.py::test_bucket_collapse_is_single_exchange).",
+        "repartition(min(n_buckets, defaultParallelism), _bucket) + "
+        "bucket-leading window = dedup + clustering + writer sort in ONE "
+        "Exchange (pinned by "
+        "tests/test_plans.py::test_bucket_collapse_is_single_exchange). "
+        "The explicit width (REPARTITION_BY_NUM) is one wave of tasks that "
+        "AQE does not coalesce: left to AQE, a small compaction's "
+        "CPU-bound sort + write ran as one task.\n\n"
+        "The tombstone payload scrub (role/text/tool → NULL on D winners "
+        "— GDPR + dead-byte hygiene, since Debezium deletes carry a full "
+        "before-image) rides the existing post-window Project: same "
+        "stage, the Exchange count and the writer-sort elision are "
+        "unchanged.",
         t._bucket_collapse(
             log.withColumn("_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(8)))
         ),
@@ -138,6 +186,7 @@ def main() -> None:
     ]
     for name, note, plan in sections:
         lines += [f"## {name}", "", note, "", "```", plan.rstrip(), "```", ""]
+    lines += [COLLAPSE_POLICY]
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(lines))

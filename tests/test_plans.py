@@ -10,6 +10,7 @@ blocking pushdown) is caught at test time, not at 100 TB.
 """
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -249,6 +250,41 @@ def test_bucket_collapse_is_single_exchange(spark):
     )
     assert "Window" in final_tree
     assert n_exchanges == 1, f"expected 1 Exchange, final tree:\n{final_tree}"
+    # ...and its width is explicit, one wave of tasks, which AQE does
+    # not coalesce: the window sort + write is CPU-bound however few
+    # bytes it shuffles
+    width = min(table.n_buckets, spark.sparkContext.defaultParallelism)
+    assert re.search(
+        rf"hashpartitioning\(_bucket#\d+, {width}\), REPARTITION_BY_NUM", plan
+    ), plan
+    assert "AQEShuffleRead" not in final_tree, final_tree
+
+
+def test_compact_collapse_runs_one_wave(spark, tmp_path):
+    """compact() of a multi-delta MOR table writes from a stage of
+    ``min(n_buckets, defaultParallelism)`` tasks.  Left to AQE, the
+    shuffle of a small table was coalesced by bytes into ONE task, so
+    the window sort and the per-bucket parquet writes ran single-core."""
+    from schema_matching_spark.operators.apply import apply_batch
+    from schema_matching_spark.sources.generator import changes
+
+    table = _table(spark, str(tmp_path / "t"), "mor")
+    for i in (1, 2):
+        log = changes(spark, 2000, n_conv=20, turns_per_conv=10,
+                      lsn_start=i * 2000, partitions=2)
+        apply_batch(table, log, f"b{i}")
+    sc = spark.sparkContext
+    sc.setJobGroup("compact-width", "compact-width")
+    try:
+        table.compact()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    write_job = st.getJobInfo(max(st.getJobIdsForGroup("compact-width")))
+    write_stage = st.getStageInfo(max(write_job.stageIds))
+    width = min(table.n_buckets, sc.defaultParallelism)
+    assert width > 1
+    assert write_stage.numTasks == width
 
 
 def test_latest_wins_aggs_are_hash_only(spark):

@@ -92,3 +92,38 @@ def test_unbounded_scan_equals_read(spark, tmp_path):
     got = sorted(map(tuple, table.scan().collect()))
     want = sorted(map(tuple, table.read().collect()))
     assert got == want
+
+
+def _group_job_ids(spark, group, build):
+    """Spark job ids started while ``build()`` runs under job group
+    ``group`` (``build`` only constructs DataFrames; nothing is
+    collected)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_many_file_reads_start_no_listing_job(spark, tmp_path):
+    """read() and scan() hand spark.read.parquet the exact file paths the
+    manifest names.  Past 32 paths Spark would list them in a Spark job
+    (one task per path) before any query runs; the engine's session keeps
+    that listing on the driver, so building either DataFrame starts no
+    job at all."""
+    table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    for i in range(6):  # every batch touches all 8 buckets: one delta each
+        log = changes(spark, 400, n_conv=40, turns_per_conv=10,
+                      lsn_start=i * 400, partitions=2)
+        apply_batch(table, log, f"b{i}")
+    assert len(table.manifest()["files"]) > 32
+    lo = table.read().agg(F.min("ts")).first()[0]
+
+    assert _group_job_ids(spark, "build-read", table.read) == []
+    assert _group_job_ids(spark, "build-scan",
+                          lambda: table.scan(ts_min=lo)) == []
+    assert table.last_scan_stats["files_read"] > 32
+    # the tracker does see jobs started under a group
+    assert _group_job_ids(spark, "run-count", lambda: table.read().count())
